@@ -136,11 +136,7 @@ def ingest(
                 if has_corrupt_col
                 else 0
             ),
-            n_all_null=_n_all_business_null(
-                staged,
-                schema if not infer_schema else None,
-                df_cols=None if not infer_schema else _business_cols(staged),
-            ),
+            n_all_null=_n_all_business_null(staged),
             version=version,
         )
     finally:
@@ -157,24 +153,17 @@ _LINEAGE_COLS = (
 
 
 def _business_cols(df: DataFrame) -> list[str]:
-    """Everything that isn't lineage metadata or the corrupt side column —
-    the business columns of an inferred-schema batch."""
+    """Everything that isn't lineage metadata or the corrupt side column."""
     drop = set(_LINEAGE_COLS) | {CORRUPT_COL}
     return [c for c in df.columns if c not in drop]
 
 
-def _n_all_business_null(
-    df: DataFrame, schema: str | None, df_cols: list[str] | None = None
-) -> int:
+def _n_all_business_null(df: DataFrame) -> int:
     """Validation: rows where every business column is null
     (``bronze/bronze_rx_claims_load.py:94-98``)."""
-    if df_cols is not None:
-        cols = df_cols
-    else:
-        cols = [c.split()[0] for c in schema.split(",")]
     pred = F.lit(True)
-    for c in cols:
-        pred = pred & F.col(c.strip()).isNull()
+    for c in _business_cols(df):
+        pred = pred & F.col(c).isNull()
     return df.filter(pred).count()
 
 

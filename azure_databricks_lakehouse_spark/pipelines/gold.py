@@ -16,11 +16,17 @@ Reference parity — ``gold/gold_rx_claims_load.py``:
   rows) can never be left pointing at the wrong dim row — unlike both
   ``monotonically_increasing_id`` (non-deterministic) and a naive
   full-rebuild rank (a new key that sorts early shifts every key after
-  it).
+  it).  A refresh MERGEs only new or changed keys, so an unchanged dim
+  commits nothing.
 - fact: 4 left equi-joins (J1-J4, ``:167-187``) with explicitly broadcast
   dims (J5) — two of them role-playing date joins disambiguated by
   pre-join aliasing; derived measure ``billed - paid`` (P12, ``:199``).
-- D3 MERGE upsert on (claim_id, claim_line_number) (``:211-230``).
+- D3 MERGE upsert on (claim_id, claim_line_number) (``:211-230``) of
+  the silver rows updated since the fact's mark.  The reference keeps
+  that mark in a ``control.watermarks`` table; here it is a table
+  property of the fact written in the MERGE's own commit, so it is
+  versioned with the data: ``SHOW TBLPROPERTIES`` shows it, and a
+  RESTORE of the fact rolls it back with the rows.
 - A5 aggregation tables (``:237-245``, truncated in the reference —
   reconstructed from its sum/count/avg/max imports at ``:10``).
 
@@ -46,11 +52,12 @@ from azure_databricks_lakehouse_spark.plans.cbo import (
     fresh_statistics,
     maybe_broadcast,
 )
-from azure_databricks_lakehouse_spark.pipelines.watermarks import (
-    append_watermark,
-    last_watermark,
-)
 from azure_databricks_lakehouse_spark.sources.tables import ParquetTable, is_table
+
+
+# fact_claims table property: the max silver_updated_timestamp (epoch
+# microseconds) the fact holds, committed with the data
+_MARK = "gold_silver_updated_through"
 
 
 @dataclass(frozen=True)
@@ -74,50 +81,6 @@ def build_dim_date(
     dim = build_date_dim(spark, start, end)
     _write(spark, paths.dim_date, dim)
     return ParquetTable.for_path(spark, paths.dim_date).read()
-
-
-def _durable_scd1_dim(
-    spark: SparkSession,
-    path: str,
-    attrs: DataFrame,
-    sk_name: str,
-    business_key: str,
-) -> DataFrame:
-    """SCD1 dim refresh with durable surrogate keys.
-
-    Existing business keys keep the SK they were first assigned — forever.
-    Attributes refresh from the source (SCD1 overwrite); NEW business keys
-    get ``max(existing sk) + dense-rank(new keys)``; business keys that
-    vanished from the source are carried over unchanged, because the fact
-    table may still reference them.  This is what lets ``build_fact`` stay
-    watermark-incremental: historical fact rows keep valid foreign keys no
-    matter how dim membership changes between runs.
-
-    Scale: the existing-key map join is a plain equi-join on the business
-    key (shuffle-partitioned both sides, no collect); ``max(sk)`` is a
-    scalar aggregate.
-    """
-    if not is_table(path):
-        dim = add_surrogate_key(attrs, sk_name, business_key=business_key)
-        dim = dim.withColumn("dim_created_timestamp", F.current_timestamp())
-    else:
-        existing = ParquetTable.for_path(spark, path).read()
-        keymap = existing.select(business_key, sk_name, "dim_created_timestamp")
-        max_sk = keymap.agg(F.max(sk_name)).first()[0] or 0
-        refreshed = attrs.join(keymap, business_key, "inner")
-        new_keyed = add_surrogate_key(
-            attrs.join(keymap.select(business_key), business_key, "left_anti"),
-            sk_name,
-            business_key=business_key,
-        ).withColumn(
-            sk_name, (F.col(sk_name) + F.lit(max_sk)).cast("long")
-        ).withColumn("dim_created_timestamp", F.current_timestamp())
-        carried = existing.join(
-            attrs.select(business_key), business_key, "left_anti"
-        )
-        dim = refreshed.unionByName(new_keyed).unionByName(carried)
-    _write(spark, path, dim)
-    return ParquetTable.for_path(spark, path).read()
 
 
 def _member_attrs(members: DataFrame) -> DataFrame:
@@ -149,7 +112,7 @@ def build_dim_member(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
     doc says SCD2 at ``bronze_silver_gold/readme.md:56`` — code wins,
     SURVEY.md §7.3)."""
     members = ParquetTable.for_path(spark, paths.silver_members).read()
-    return _durable_scd1_dim(
+    return _scoped_dim_refresh(
         spark,
         paths.dim_member,
         _member_attrs(members),
@@ -160,7 +123,7 @@ def build_dim_member(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
 
 def build_dim_provider(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
     providers = ParquetTable.for_path(spark, paths.silver_providers).read()
-    return _durable_scd1_dim(
+    return _scoped_dim_refresh(
         spark,
         paths.dim_provider,
         _provider_attrs(providers),
@@ -176,22 +139,34 @@ def _scoped_dim_refresh(
     sk_name: str,
     business_key: str,
 ) -> DataFrame:
-    """Per-trigger dim maintenance with cost ∝ the micro-batch: ``attrs``
-    is the dim projection ALREADY semi-joined to the batch's business
-    keys.  Keys whose attributes match the stored dim row are dropped
-    from the work set; new keys get ``max(sk) + dense-rank`` surrogates;
-    changed keys keep their durable SK and ``dim_created_timestamp``.
-    The survivors MERGE on the business key — with the table layer's
-    touched-file pruning, only data files containing those keys rewrite,
-    and a trigger with nothing new leaves the dim table's files
-    byte-untouched (no commit at all).
+    """SCD1 dim refresh with durable surrogate keys, as a change-only
+    MERGE of the keys in ``attrs``.
 
-    Contract vs the batch build: FK integrity for every key the stream
-    has seen, and SCD1 attribute refresh for TOUCHED keys; attribute
-    drift on keys the stream never sees again is reconciled by the next
-    batch :func:`build_dim_member` / :func:`build_dim_provider` run (the
-    standard streaming-dim split — per-trigger cost can't be ∝ batch AND
-    observe every quiet-key change)."""
+    The first build (no dim table yet) assigns dense 1..N in
+    business-key order (``operators/dims.add_surrogate_key``).  After
+    that, keys whose attributes match the stored dim row are dropped
+    from the work set; new keys get ``max(sk) + dense-rank`` surrogates;
+    changed keys keep their durable SK and ``dim_created_timestamp``;
+    keys absent from ``attrs`` are left as they are, because the fact
+    table may still reference them.  Keys are never renumbered, which
+    is what lets ``build_fact`` stay watermark-incremental: historical
+    fact rows keep valid foreign keys no matter how dim membership
+    changes between runs.
+
+    The survivors MERGE on the business key — with the table layer's
+    touched-file pruning, only data files containing those keys
+    rewrite, and an unchanged dim commits nothing (its files stay
+    byte-untouched).  The batch build passes the full attribute
+    projection; a streaming trigger passes the projection semi-joined
+    to its batch's keys, so per-trigger cost is ∝ the micro-batch
+    (attribute drift on keys the stream never sees again is reconciled
+    by the next batch :func:`build_dim_member` /
+    :func:`build_dim_provider` run)."""
+    if not is_table(path):
+        dim = add_surrogate_key(
+            attrs, sk_name, business_key=business_key
+        ).withColumn("dim_created_timestamp", F.current_timestamp())
+        return ParquetTable.create(spark, path, dim).read()
     table = ParquetTable.for_path(spark, path)
     dim = table.read()
     attr_cols = [c for c in attrs.columns if c != business_key]
@@ -330,16 +305,26 @@ def build_fact(spark: SparkSession, paths: LakehousePaths) -> int:
     """4-way star join + derived measure + MERGE
     (``gold/gold_rx_claims_load.py:154-232``).
 
-    Incremental: only silver rows updated since the gold watermark join
-    and merge (the MERGE makes replays idempotent; the watermark makes
+    Incremental: only silver rows updated since the fact's mark join
+    and merge (the MERGE makes replays idempotent; the mark makes
     steady-state runs proportional to the delta, not the table — at
-    100 TB re-joining seven years of facts nightly is the bug)."""
-    wm = last_watermark(spark, paths, "gold_fact_rx_claims")
+    100 TB re-joining seven years of facts nightly is the bug).  The
+    mark is a fact table property committed with the MERGE, so a
+    RESTORE of the fact rewinds it with the rows."""
+    fact_t = (
+        ParquetTable.for_path(spark, paths.fact_claims)
+        if is_table(paths.fact_claims)
+        else None
+    )
+    wm = fact_t.properties().get(_MARK) if fact_t is not None else None
     claims = ParquetTable.for_path(spark, paths.silver_claims).read()
     if wm is not None:
-        claims = claims.filter(F.col("silver_updated_timestamp") > F.lit(wm))
-    if is_table(paths.fact_claims) and claims.isEmpty():
-        return ParquetTable.for_path(spark, paths.fact_claims).read().count()
+        claims = claims.filter(
+            F.col("silver_updated_timestamp") > F.timestamp_micros(F.lit(wm))
+        )
+    new_wm = claims.agg(F.max(F.unix_micros("silver_updated_timestamp"))).first()[0]
+    if fact_t is not None and new_wm is None:  # no new silver rows
+        return fact_t.read().count()
     member_t = ParquetTable.for_path(spark, paths.dim_member)
     provider_t = ParquetTable.for_path(spark, paths.dim_provider)
     date_t = ParquetTable.for_path(spark, paths.dim_date)
@@ -358,18 +343,18 @@ def build_fact(spark: SparkSession, paths: LakehousePaths) -> int:
         },
     )
 
-    if is_table(paths.fact_claims):
-        ParquetTable.for_path(spark, paths.fact_claims).merge(
-            fact, on=["claim_id", "claim_line_number"]
-        )
+    mark = {_MARK: new_wm}
+    if fact_t is not None:
+        fact_t.merge(fact, on=["claim_id", "claim_line_number"], extra_props=mark)
     else:
-        ParquetTable.create(
+        fact_t = ParquetTable.create(
             spark, paths.fact_claims, fact, partition_by=["service_month"]
         )
-    new_wm = claims.agg(F.max("silver_updated_timestamp")).first()[0]
-    if new_wm is not None:
-        append_watermark(spark, paths, "gold_fact_rx_claims", new_wm)
-    return ParquetTable.for_path(spark, paths.fact_claims).read().count()
+        if new_wm is not None:
+            # a crash before the mark lands costs one full, idempotent
+            # re-MERGE on the next run
+            fact_t.set_properties(mark)
+    return fact_t.read().count()
 
 
 def build_aggregation_tables(spark: SparkSession, paths: LakehousePaths) -> None:
@@ -447,10 +432,11 @@ def stream(
       retract via ``when_matched_delete`` (unmatched delete rows are
       no-ops per the CDC contract).
 
-    The stream checkpoint's source offsets replace the gold watermark
-    table — the control table is never touched.  Aggregate tables stay
-    a batch refresh (:func:`build_aggregation_tables`) after/alongside
-    the stream, as on Databricks where they'd be a separate rollup job.
+    The stream checkpoint's source offsets replace the batch build's
+    table-property mark, which the stream never writes.  Aggregate
+    tables stay a batch refresh (:func:`build_aggregation_tables`)
+    after/alongside the stream, as on Databricks where they'd be a
+    separate rollup job.
 
     Scale: cost per trigger ∝ changed silver rows (CDF streams sidecar
     files, never rescans silver); dim refresh is scoped to the batch's

@@ -10,9 +10,10 @@ module is the engine's equivalent entry point:
         --root /data/lake --landing '/data/landing/*.csv' \\
         [--members parquet] [--providers parquet]
 
-Each stage is independently idempotent (MERGE + watermarks), so re-running
-after a partial failure is safe — the medallion contract
-(``bronze_silver_gold/readme.md:68-74``).
+Each stage is independently idempotent (MERGE, with each step's
+high-water mark stored as a property of the table it writes, in the same
+commit), so re-running after a partial failure is safe — the medallion
+contract (``bronze_silver_gold/readme.md:68-74``).
 """
 
 from __future__ import annotations

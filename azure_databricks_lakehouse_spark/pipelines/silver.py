@@ -4,8 +4,8 @@ Reference parity — ``process_bronze_to_silver``
 (``silver/silver_rx_claims_load.py:181-235``) plus the truncated tail
 reconstructed from the pattern doc (``bronze_silver_gold/readme.md:42,74``):
 
-1. ST1 watermark lookup (``:29-43``): max processed ingestion_timestamp
-   from the control table; full load when none.
+1. ST1 watermark lookup (``:29-43``): max processed ingestion_timestamp,
+   read from the silver table's own properties; full load when none.
 2. Incremental bronze read (``:189-195``): the literal watermark predicate
    pushes into the parquet scan (data skipping).
 3. Cleansing (``cleanse_and_standardize``, ``:137-157``): trim/upper ids
@@ -18,20 +18,29 @@ reconstructed from the pattern doc (``bronze_silver_gold/readme.md:42,74``):
 6. W1 dedup-to-latest per (claim_id, claim_line_number) with the
    reference's tiebreak order (``:159-179``).
 7. Silver metadata columns (``:233-235``), MERGE into silver (idempotent
-   re-runs), watermark row appended (``:45-63``).
+   re-runs).  The reference appends a row to a ``control.watermarks``
+   table (``:45-63``); here the new mark is a table property of silver
+   written in the MERGE's own commit, so it is versioned with the data:
+   ``SHOW TBLPROPERTIES`` shows it, and a RESTORE of silver rolls it
+   back with the rows (the next run re-processes what the restore
+   removed).
 
-Scale: exactly one wide shuffle (the dedup window on the claim key); the
-MERGE reuses it as the upsert join key.  Quarantine + silver writes come
-from the same cached tagged frame — one source scan total.
+Scale: the mark lookup is a manifest read (no Spark job), and one
+aggregate gives both the delta's row count and its new mark.  Exactly
+one wide shuffle (the dedup window on the claim key); the MERGE reuses
+it as the upsert join key.  Quarantine + silver writes come from the
+same cached tagged frame — one source scan total.
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from dataclasses import dataclass
 from datetime import datetime
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampType
 
 from azure_databricks_lakehouse_spark.operators.dedup import keep_latest
 from azure_databricks_lakehouse_spark.operators.dq import (
@@ -41,13 +50,12 @@ from azure_databricks_lakehouse_spark.operators.dq import (
     split_by_status,
 )
 from azure_databricks_lakehouse_spark.pipelines.paths import LakehousePaths
-from azure_databricks_lakehouse_spark.pipelines.watermarks import (
-    append_watermark,
-    last_watermark,
-)
 from azure_databricks_lakehouse_spark.sources.tables import ParquetTable, is_table
 
 _KEYS = ["claim_id", "claim_line_number"]
+# silver_claims table property: the max bronze ingestion_timestamp
+# (epoch microseconds) this table holds, committed with the data
+_MARK = "silver_bronze_ingested_through"
 
 
 @dataclass(frozen=True)
@@ -88,14 +96,15 @@ def pipeline_rules() -> list[Rule]:
     ]
 
 
-def _apply_silver_batch(
-    spark: SparkSession, bronze: DataFrame, paths: LakehousePaths
-) -> tuple[int, int]:
-    """The cleanse → DQ gate → quarantine → dedup → MERGE body shared by
-    the batch run (:func:`process`) and the streaming-native run
-    (:func:`stream`).  Returns ``(n_pass, n_fail)``.  Idempotent per
-    input delta: the quarantine clears-then-appends by bronze load
-    batch, and the silver MERGE replaces matched keys."""
+@contextmanager
+def _silver_delta(spark: SparkSession, bronze: DataFrame, paths: LakehousePaths):
+    """The cleanse → DQ gate → quarantine → dedup body shared by the
+    batch run (:func:`process`) and the streaming-native run
+    (:func:`stream`).  Yields ``(deduped, n_fail)`` while the tagged
+    frame is cached, so the caller's silver write reads the same cached
+    rows as the quarantine.  Idempotent per input delta: the quarantine
+    clears-then-appends by bronze load batch, and the caller's silver
+    MERGE replaces matched keys."""
     # P13 columns introspection (bronze/bronze_rx_claims_load.py:104): the
     # corrupt side-channel only exists when the bronze schema captured it.
     if "_corrupt_record" in bronze.columns:
@@ -112,7 +121,7 @@ def _apply_silver_batch(
             )
             if is_table(paths.quarantine):
                 # Idempotent replay: a re-run of the same bronze delta
-                # (e.g. after a failure before the watermark advanced)
+                # (e.g. after a failure before the silver commit landed)
                 # first clears rows from the same load batches, so the
                 # quarantine never accumulates duplicates.
                 batch_ids = [
@@ -133,24 +142,29 @@ def _apply_silver_batch(
                 F.col("ingestion_timestamp").desc(),
             ],
         ).withColumn("silver_updated_timestamp", F.current_timestamp())
-        n_pass = deduped.count()
-
-        if is_table(paths.silver_claims):
-            tbl = ParquetTable.for_path(spark, paths.silver_claims)
-            tbl.merge(deduped, on=_KEYS)
-        else:
-            ParquetTable.create(spark, paths.silver_claims, deduped)
-        return n_pass, n_fail
+        yield deduped, n_fail
     finally:
         tagged.unpersist()
 
 
+def _as_datetime(us: int | None) -> datetime | None:
+    return None if us is None else TimestampType().fromInternal(us)
+
+
 def process(spark: SparkSession, paths: LakehousePaths) -> SilverResult:
     """Bronze → Silver incremental run; idempotent under re-execution."""
-    wm = last_watermark(spark, paths, "silver_rx_claims")
+    silver_t = (
+        ParquetTable.for_path(spark, paths.silver_claims)
+        if is_table(paths.silver_claims)
+        else None
+    )
+    # the mark is a manifest read — no Spark job; none means full load
+    wm = silver_t.properties().get(_MARK) if silver_t is not None else None
     bronze = ParquetTable.for_path(spark, paths.bronze_claims).read()
     if wm is not None:
-        bronze = bronze.filter(F.col("ingestion_timestamp") > F.lit(wm))
+        bronze = bronze.filter(
+            F.col("ingestion_timestamp") > F.timestamp_micros(F.lit(wm))
+        )
     if "_corrupt_record" in bronze.columns:
         # filtered here too (not only in the shared body) so
         # n_incremental counts governable rows, as it always has
@@ -158,14 +172,28 @@ def process(spark: SparkSession, paths: LakehousePaths) -> SilverResult:
             "_corrupt_record"
         )
 
-    n_incremental = bronze.count()
+    n_incremental, new_wm = bronze.agg(
+        F.count(F.lit(1)), F.max(F.unix_micros("ingestion_timestamp"))
+    ).first()
     if n_incremental == 0:
-        return SilverResult(0, 0, 0, 0, wm)
+        return SilverResult(0, 0, 0, 0, _as_datetime(wm))
 
-    n_pass, n_fail = _apply_silver_batch(spark, bronze, paths)
-    new_wm = bronze.agg(F.max("ingestion_timestamp")).first()[0]
-    append_watermark(spark, paths, "silver_rx_claims", new_wm)
-    return SilverResult(n_incremental, n_pass, n_fail, n_pass, new_wm)
+    mark = {_MARK: new_wm}
+    with _silver_delta(spark, bronze, paths) as (deduped, n_fail):
+        n_pass = deduped.count()
+        if silver_t is None:
+            # a crash before the mark lands costs one full, idempotent
+            # re-MERGE on the next run
+            ParquetTable.create(
+                spark, paths.silver_claims, deduped
+            ).set_properties(mark)
+        elif n_pass:
+            silver_t.merge(deduped, on=_KEYS, extra_props=mark)
+        else:
+            # an all-quarantined delta merges nothing, so no MERGE
+            # commit would carry the mark
+            silver_t.set_properties(mark)
+    return SilverResult(n_incremental, n_pass, n_fail, n_pass, _as_datetime(new_wm))
 
 
 def stream(
@@ -178,7 +206,7 @@ def stream(
     """Streaming-native bronze → silver (round-7 verdict item 6; SURVEY
     ST1's "streaming-native" column): the bronze TABLE is the streaming
     source, so Delta-source offsets (commit versions tracked in the
-    stream checkpoint) replace the manual watermark control table —
+    stream checkpoint) replace the batch run's table-property mark —
     exactly how a Databricks pipeline graduates from scheduled
     incremental batch to continuous.
 
@@ -208,7 +236,14 @@ def stream(
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
-        _apply_silver_batch(batch_df.sparkSession, batch_df, paths)
+        sess = batch_df.sparkSession
+        with _silver_delta(sess, batch_df, paths) as (deduped, _):
+            if is_table(paths.silver_claims):
+                ParquetTable.for_path(sess, paths.silver_claims).merge(
+                    deduped, on=_KEYS
+                )
+            else:
+                ParquetTable.create(sess, paths.silver_claims, deduped)
 
     writer = (
         src.writeStream.foreachBatch(_sink)

@@ -62,7 +62,7 @@ def test_durable_sk_never_renumbers(spark, tmp_path):
     """A dim member whose business key sorts BEFORE existing keys must not
     shift existing surrogate keys (watermark-incremental facts keep valid
     FKs — the naive full-rebuild rank fails this)."""
-    from azure_databricks_lakehouse_spark.pipelines.gold import _durable_scd1_dim
+    from azure_databricks_lakehouse_spark.pipelines.gold import _scoped_dim_refresh
 
     path = str(tmp_path / "dim")
 
@@ -71,12 +71,12 @@ def test_durable_sk_never_renumbers(spark, tmp_path):
             [(k, f"name-{k}") for k in keys], "member_key string, name string"
         )
 
-    first = _durable_scd1_dim(spark, path, attrs(["b", "c"]), "sk", "member_key")
+    first = _scoped_dim_refresh(spark, path, attrs(["b", "c"]), "sk", "member_key")
     got1 = {r["member_key"]: r["sk"] for r in first.collect()}
     assert got1 == {"b": 1, "c": 2}
 
     # 'a' sorts before every existing key; 'c' vanishes from the source.
-    second = _durable_scd1_dim(spark, path, attrs(["a", "b", "d"]), "sk", "member_key")
+    second = _scoped_dim_refresh(spark, path, attrs(["a", "b", "d"]), "sk", "member_key")
     got2 = {r["member_key"]: r["sk"] for r in second.collect()}
     assert got2["b"] == 1 and got2["c"] == 2          # never renumbered/carried
     assert got2["a"] == 3 and got2["d"] == 4           # max(sk)+rank over new keys

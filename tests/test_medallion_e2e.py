@@ -140,12 +140,13 @@ def test_full_medallion_flow(spark, lake, tmp_path):
     gres2 = gold.build(spark, lake, "2024-01-01", "2024-12-31")
     assert gres2.n_fact == 4
     # no new silver rows -> the fact merge is skipped entirely (gold
-    # watermark), so the fact table's history stays at its CREATE commit
+    # mark), so the fact table's history stays at its CREATE commit and
+    # the commit that recorded the first run's mark
     fact_ops = [
         c.operation
         for c in ParquetTable.for_path(spark, lake.fact_claims).history()
     ]
-    assert fact_ops == ["CREATE"]
+    assert fact_ops == ["CREATE", "SETPROPERTIES"]
 
     # --- Day 2 incremental -------------------------------------------------
     bronze.ingest(
@@ -172,7 +173,10 @@ def test_full_medallion_flow(spark, lake, tmp_path):
         c.operation
         for c in ParquetTable.for_path(spark, lake.fact_claims).history()
     ]
-    assert fact_ops == ["CREATE", "MERGE"]
+    assert fact_ops == ["CREATE", "SETPROPERTIES", "MERGE"]
+    # each step's mark lives in the table it writes; no control table
+    assert not os.path.exists(lake.watermarks)
+    assert not os.path.exists(os.path.join(lake.root, "control"))
 
 
 def test_surrogate_keys_stable_across_rebuilds(spark, lake, tmp_path):
@@ -192,23 +196,159 @@ def test_surrogate_keys_stable_across_rebuilds(spark, lake, tmp_path):
         for r in ParquetTable.for_path(spark, lake.dim_member).read().collect()
     }
     assert sk1 == sk2  # dense-rank surrogate keys don't churn on rebuild
+    assert not os.path.exists(lake.watermarks)
+
+
+def _data_files(root):
+    """{relative data file path: (mtime_ns, size)} under a table root."""
+    out = {}
+    data = os.path.join(root, "data")
+    for dirpath, _dirs, names in os.walk(data):
+        for n in names:
+            p = os.path.join(dirpath, n)
+            st = os.stat(p)
+            out[os.path.relpath(p, data)] = (st.st_mtime_ns, st.st_size)
+    return out
+
+
+def test_batch_gold_leaves_unchanged_dims_uncommitted(spark, lake, tmp_path):
+    """Batch twin of the streaming quiet-trigger test: a second
+    ``gold.build`` over unchanged silver members/providers commits
+    nothing to dim_member/dim_provider — same latest version, same data
+    files byte for byte — while new silver claims still reach the fact."""
+    bronze.ingest(
+        spark, lake.bronze_claims, _land(tmp_path, "d1.csv", _DAY1), load_id="b1"
+    )
+    silver.process(spark, lake)
+    _load_reference_tables(spark, lake)
+    gold.build(spark, lake, "2024-01-01", "2024-12-31")
+    dims = (lake.dim_member, lake.dim_provider)
+    versions = {r: ParquetTable.for_path(spark, r).latest_version() for r in dims}
+    files = {r: _data_files(r) for r in dims}
+
+    bronze.ingest(
+        spark, lake.bronze_claims, _land(tmp_path, "d2.csv", _DAY2), load_id="b2"
+    )
+    silver.process(spark, lake)
+    gres = gold.build(spark, lake, "2024-01-01", "2024-12-31")
+    assert gres.n_fact == 5
+    for r in dims:
+        assert ParquetTable.for_path(spark, r).latest_version() == versions[r]
+        assert _data_files(r) == files[r], f"dim files rewritten: {r}"
+    assert not os.path.exists(lake.watermarks)
+
+
+def test_restore_rewinds_silver_mark(spark, lake, tmp_path):
+    """The silver mark is versioned with silver's data: RESTORE to the
+    version before a batch, and the next run re-processes that batch's
+    bronze rows instead of skipping them."""
+    bronze.ingest(
+        spark, lake.bronze_claims, _land(tmp_path, "d1.csv", _DAY1), load_id="b1"
+    )
+    silver.process(spark, lake)
+    silver_t = ParquetTable.for_path(spark, lake.silver_claims)
+    v_pre = silver_t.latest_version()
+    mark_pre = silver_t.properties()[silver._MARK]
+    bronze.ingest(
+        spark, lake.bronze_claims, _land(tmp_path, "d2.csv", _DAY2), load_id="b2"
+    )
+    assert silver.process(spark, lake).n_incremental == 2
+    assert silver_t.properties()[silver._MARK] > mark_pre
+    assert silver.process(spark, lake).n_incremental == 0
+
+    silver_t.restore(v_pre)
+    assert silver_t.properties()[silver._MARK] == mark_pre
+    assert silver_t.read().count() == 4  # C005 gone with the restore
+    sres = silver.process(spark, lake)
+    assert sres.n_incremental == 2 and sres.n_pass == 2
+    got = silver_t.read()
+    assert got.count() == 5
+    assert float(got.filter(F.col("claim_id") == "C004").first()["paid_amount"]) == 9.99
+    assert not os.path.exists(lake.watermarks)
 
 
 def test_quarantine_replay_is_idempotent(spark, lake, tmp_path):
-    from pyspark.sql import functions as F
-
+    # a clean first batch, so silver exists before the run under test
+    bronze.ingest(
+        spark, lake.bronze_claims, _land(tmp_path, "d0.csv", _DAY2), load_id="b0"
+    )
+    silver.process(spark, lake)
+    silver_t = ParquetTable.for_path(spark, lake.silver_claims)
+    v_pre = silver_t.latest_version()
     bronze.ingest(
         spark, lake.bronze_claims, _land(tmp_path, "d1.csv", _DAY1), load_id="b1"
     )
     silver.process(spark, lake)
     q1 = ParquetTable.for_path(spark, lake.quarantine).read().count()
 
-    # simulate a crash after the quarantine write but before the watermark
-    # advanced: rewind the watermark and re-run the same delta
-    wm_tbl = ParquetTable.for_path(spark, lake.watermarks)
-    wm_tbl.delete(F.col("table_name") == "silver_rx_claims")
+    # simulate a crash after the quarantine write but before the silver
+    # commit (which carries the mark): restore silver to its pre-run
+    # version and re-run the same delta
+    silver_t.restore(v_pre)
     silver.process(spark, lake)
     assert ParquetTable.for_path(spark, lake.quarantine).read().count() == q1
+
+
+@pytest.fixture()
+def codegen_on(spark):
+    """Spark's default codegen settings for one test: the suite's session
+    runs interpreted (``tests/conftest.py``), production sessions do not."""
+    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.unset(k)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
+def test_medallion_with_codegen_on(spark, lake, tmp_path, codegen_on):
+    """Bronze → silver → gold, day 1 then day 2, with whole-stage and
+    expression codegen at Spark's defaults — the MERGE and dim-refresh
+    plans as a production session compiles them."""
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    assert spark.conf.get("spark.sql.codegen.factoryMode") == "FALLBACK"
+    _load_reference_tables(spark, lake)
+    for name, content, load_id in (("d1.csv", _DAY1, "b1"), ("d2.csv", _DAY2, "b2")):
+        bronze.ingest(
+            spark, lake.bronze_claims, _land(tmp_path, name, content), load_id=load_id
+        )
+        silver.process(spark, lake)
+        gres = gold.build(spark, lake, "2024-01-01", "2024-12-31")
+    assert gres.n_fact == 5
+    assert gres.n_dim_member == 3 and gres.n_dim_provider == 2
+    fact = ParquetTable.for_path(spark, lake.fact_claims).read()
+    assert float(fact.filter(F.col("claim_id") == "C004").first()["paid_amount"]) == 9.99
+    c001 = fact.filter(F.col("claim_id") == "C001").first()
+    assert float(c001["member_liability"]) == 15.00
+    assert c001["member_sk"] is not None and c001["provider_sk"] is not None
+    by_month = {
+        r["service_month"]: r["n_claims"]
+        for r in ParquetTable.for_path(spark, lake.agg_by_month).read().collect()
+    }
+    assert by_month == {202401: 1, 202402: 1, 202403: 1, 202404: 1, 202406: 1}
+
+
+def test_bronze_decimal_schema_validates(spark, tmp_path):
+    """A caller schema whose types contain commas (``DECIMAL(18,2)``)
+    lands and validates: the all-null check takes its columns from the
+    frame, not from splitting the schema string."""
+    csv = _land(
+        tmp_path, "dec.csv", "claim_id,amt\nC001,12.50\n,\nC003,\n"
+    )
+    root = str(tmp_path / "bronze_dec")
+    res = bronze.ingest(
+        spark, root, csv, schema="claim_id STRING, amt DECIMAL(18,2)"
+    )
+    assert res.n_rows == 3 and res.n_corrupt == 0 and res.n_all_null == 1
+    df = ParquetTable.for_path(spark, root).read()
+    assert dict(df.dtypes)["amt"] == "decimal(18,2)"
+    assert df.count() == 3
 
 
 def test_bronze_infer_schema_optin(spark, tmp_path):

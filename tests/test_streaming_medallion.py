@@ -1,6 +1,6 @@
 """Streaming-native bronze → silver (`pipelines/silver.stream`): the
 bronze TABLE as a streaming source, Delta-source offsets in the stream
-checkpoint replacing the manual watermark table — and batch/streaming
+checkpoint replacing the batch run's high-water mark — and batch/streaming
 silver converging to the same table on the same input (round-7 verdict
 item 6)."""
 
@@ -56,7 +56,7 @@ def test_streaming_silver_converges_with_batch(spark, tmp_path):
         bronze.ingest(spark, lake.bronze_claims, day1, load_id="b1")
         bronze.ingest(spark, lake.bronze_claims, day2, load_id="b2")
 
-    # batch path: manual watermark table drives the increment
+    # batch path: silver's table-property mark drives the increment
     silver.process(spark, batch_lake)
     # streaming path: stream checkpoint offsets drive the increment
     q = silver.stream(
@@ -202,10 +202,8 @@ def test_streaming_gold_quiet_batch_leaves_dims_untouched(spark, tmp_path):
     data files stay byte-identical (same set, same mtimes) — while the
     fact still upserts the changed claim, and a batch carrying a NEW
     key appends exactly that key."""
-    import os as _os
-
     from azure_databricks_lakehouse_spark.pipelines import gold
-    from tests.test_medallion_e2e import _load_reference_tables
+    from tests.test_medallion_e2e import _data_files, _load_reference_tables
 
     lake = LakehousePaths(str(tmp_path / "lk"))
     bronze.ingest(
@@ -218,18 +216,8 @@ def test_streaming_gold_quiet_batch_leaves_dims_untouched(spark, tmp_path):
     ckg = str(tmp_path / "ckg")
     gold.stream(spark, lake, checkpoint=ckg).awaitTermination(120)
 
-    def _files(root):
-        out = {}
-        data = _os.path.join(root, "data")
-        for dirpath, _dirs, names in _os.walk(data):
-            for n in names:
-                p = _os.path.join(dirpath, n)
-                st = _os.stat(p)
-                out[_os.path.relpath(p, data)] = (st.st_mtime_ns, st.st_size)
-        return out
-
     dim_files_before = {
-        r: _files(r) for r in (lake.dim_member, lake.dim_provider)
+        r: _data_files(r) for r in (lake.dim_member, lake.dim_provider)
     }
     dim_versions_before = {
         r: ParquetTable.for_path(spark, r).latest_version()
@@ -243,7 +231,7 @@ def test_streaming_gold_quiet_batch_leaves_dims_untouched(spark, tmp_path):
     gold.stream(spark, lake, checkpoint=ckg).awaitTermination(120)
 
     for r in (lake.dim_member, lake.dim_provider):
-        assert _files(r) == dim_files_before[r], f"dim files rewritten: {r}"
+        assert _data_files(r) == dim_files_before[r], f"dim files rewritten: {r}"
         assert (
             ParquetTable.for_path(spark, r).latest_version()
             == dim_versions_before[r]
