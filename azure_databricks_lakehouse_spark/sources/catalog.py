@@ -116,7 +116,9 @@ def spread(df: DataFrame, *keys: str) -> DataFrame:
             df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
         )
     except Exception:  # noqa: BLE001 - stats are advisory
-        est = 0
+        # fail closed: with no size estimate the byte gate cannot rule
+        # out an input-wide shuffle, so leave the frame as it is
+        return df
     if est > _SPREAD_MAX_BYTES:
         return df
     return df.repartition(p, *keys)

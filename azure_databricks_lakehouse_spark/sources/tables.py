@@ -87,6 +87,9 @@ _CDC_DIR = "_change_data"
 _DV_DIR = "_deletion_vectors"
 _SIDECAR_DIR = os.path.join(_MANIFEST_DIR, "_sidecars")
 _LEDGER_DIR = "_copy_ledger"
+# MERGE: the whenMatchedDelete flag column the source carries into the
+# rewrite join (reserved)
+_MERGE_DEL = "__mrg_del"
 
 # parsed stats/bloom sidecar files, cached by absolute path — sidecar
 # files are immutable once written, so entries can never go stale.
@@ -1313,14 +1316,15 @@ class ParquetTable:
             for f in _schema_from_json(self.spark, m["schema"]).fields
         }
 
+        # SET values live in the persisted marked frames (``_attach``)
+        # as ``__set_<col>``: the data write and the CDC post-images read
+        # ONE evaluation, so even current_timestamp() agrees between them
+        set_cols = {c: f"__set_{c}" for c in assignments}
+
         def _post_image(frame: DataFrame) -> DataFrame:
-            # assignments cast to the DECLARED column type (SQL UPDATE /
-            # Delta implicit-cast semantics) — without the cast, a
-            # double RHS into a decimal column would commit a data file
-            # whose physical type contradicts the table schema and break
-            # every later read of that file.  A materialized __row_id
-            # rides through: an updated row is the SAME logical row, so
-            # its post-image keeps its stable id (row tracking).
+            # a materialized __row_id rides through: an updated row is
+            # the SAME logical row, so its post-image keeps its stable
+            # id (row tracking)
             extra = (
                 [F.col(_ROW_ID_PHYS)]
                 if _ROW_ID_PHYS in frame.columns
@@ -1328,7 +1332,7 @@ class ParquetTable:
             )
             out = frame.select(
                 *[
-                    assignments[c].cast(gtypes[c]).alias(c)
+                    F.col(set_cols[c]).alias(c)
                     if c in assignments
                     else F.col(c)
                     for c in schema_cols
@@ -1354,9 +1358,6 @@ class ParquetTable:
         # rewrite output — one commit pays one scan per file class and
         # one data write, not a fresh scan per sink
         rt = self._rt_state(m) is not None
-        corr_cols = [
-            c for lk, _ in (corr_lookups or ()) for c in lk.columns
-        ]
 
         def _attach(frame: DataFrame) -> DataFrame:
             # decorrelated scalar lookups ride the touched rows: one
@@ -1364,7 +1365,17 @@ class ParquetTable:
             # once thanks to the persist below
             for lk, cond_sql in corr_lookups or ():
                 frame = frame.join(lk, F.expr(cond_sql), "left")
-            return frame
+            # the SET values, on matched rows only, cast to the DECLARED
+            # column type (SQL UPDATE / Delta implicit-cast semantics) —
+            # without the cast, a double RHS into a decimal column would
+            # commit a data file whose physical type contradicts the
+            # table schema and break every later read of that file
+            return frame.withColumns(
+                {
+                    set_cols[c]: F.when(hit, e.cast(gtypes[c]))
+                    for c, e in assignments.items()
+                }
+            )
 
         marked_rw = marked_dv = matched_dv = None
         if rewrite:
@@ -1389,20 +1400,19 @@ class ParquetTable:
             if marked_rw is not None:
                 pre_parts.append(
                     marked_rw.filter(hit).select(
-                        *schema_cols, *corr_cols, *cdc_id_cols
+                        *schema_cols, *set_cols.values(), *cdc_id_cols
                     )
                 )
             if matched_dv is not None:
                 pre_parts.append(
                     matched_dv.select(
-                        *schema_cols, *corr_cols, *cdc_id_cols
+                        *schema_cols, *set_cols.values(), *cdc_id_cols
                     )
                 )
             pre = pre_parts[0]
             for p in pre_parts[1:]:
                 pre = pre.unionByName(p)
             post = _post_image(pre)
-            # lookup cols: eval-only
             pre = pre.select(*schema_cols, *cdc_id_cols)
             # constraints are checked on the POST-update image of matched
             # rows only — the checked set stays proportional to the change
@@ -1422,13 +1432,13 @@ class ParquetTable:
             # post-images, in ONE write action
             data_parts: list[DataFrame] = []
             if marked_rw is not None:
-                # assignment RHS cast to the declared type BEFORE the
-                # when/otherwise — else Spark coerces the branch types
+                # the SET value is already cast to the declared type —
+                # else Spark coerces the when/otherwise branch types
                 # (e.g. decimal ⊔ double = double) and the rewritten
                 # file's physical type contradicts the table schema
                 updated = marked_rw.select(
                     *[
-                        F.when(F.col("__hit"), assignments[c].cast(gtypes[c]))
+                        F.when(F.col("__hit"), F.col(set_cols[c]))
                         .otherwise(F.col(c))
                         .alias(c)
                         if c in assignments
@@ -4137,6 +4147,24 @@ class ParquetTable:
         but excluded from the stored payload — without it a CDC ``_op``
         column would schema-evolve INTO the table.
 
+        One core (Delta's MERGE shape, which writes CDF from the output
+        of its single rewrite join): the rewrite files' rows, grouped by
+        key (``__t``), FULL OUTER JOIN the source grouped by key
+        (``__s``, the delete flag kept as a field).  That joined frame is
+        persisted once and every output is a projection of it: the
+        stored rows (a key's non-delete source rows if it has any source
+        row, else its target rows), the CDC sidecar
+        (``update_preimage`` / ``delete`` from ``__t``,
+        ``update_postimage`` / ``insert`` from the stored source rows),
+        and the matched rows' inherited ``_row_id`` / identity values.
+        Invariant: every CDC row equals the row this commit stores (or
+        removed) — the data and CDC writes read one evaluation of the
+        source, so even ``current_timestamp()`` agrees between them.
+        Grouping by key keeps a source row stored once however many
+        target rows share its key (a duplicate-key target group
+        collapses to the source rows), and keeps each target row's
+        pre-image single.
+
         When every partition column is part of ``on``, only partitions
         present in the source are rewritten — untouched data files carry
         over by reference (partition-pruned MERGE; the 100 TB path).
@@ -4153,12 +4181,12 @@ class ParquetTable:
         source rows matching the SAME target row make the update
         nondeterministic, so Delta aborts the merge
         (DELTA_MULTIPLE_SOURCE_ROW_MATCHING_TARGET); without the check
-        this engine's anti-join+union would silently store BOTH source
-        rows.  Duplicate keys that match no target row stay legal —
-        they are plain multi-row inserts, exactly Delta's behavior.
-        Cost: the duplicate-key flag rides the touched-file probe's own
-        collect (no extra Spark action — round 12); the partition-pruned
-        path pays a dedicated source count-aggregate, and the detailed
+        this engine would silently store BOTH source rows.  Duplicate
+        keys that match no target row stay legal — they are plain
+        multi-row inserts, exactly Delta's behavior.  Cost: the
+        duplicate-key flag rides the touched-file probe's own collect
+        (no extra Spark action — round 12); the partition-pruned path
+        pays a dedicated source count-aggregate, and the detailed
         target-side check runs only when a duplicate actually exists.
 
         ``evolve_schema`` (Delta's ``withSchemaEvolution()`` / SQL
@@ -4173,8 +4201,8 @@ class ParquetTable:
         ``identity_passthrough`` (internal, for engine rewrites whose
         source rows ARE the target's own rows — :meth:`update_where_in`):
         the source carries the identity columns verbatim instead of
-        omitting them, no inheritance join or fresh allocation runs, and
-        the high water is untouched.  Never expose to user sources: it
+        omitting them, no inheritance or fresh allocation runs, and the
+        high water is untouched.  Never expose to user sources: it
         bypasses the GENERATED ALWAYS refusal.
         """
         m = self._manifest()
@@ -4225,24 +4253,23 @@ class ParquetTable:
                 .filter(F.col("__n") > 1)
                 .drop("__n")
             )
-        # split the CDC clauses BEFORE schema checks: meta columns are
-        # contract-excluded from the payload, delete rows carry no payload
-        if when_matched_delete is not None:
-            # keys of ALL source rows (upserts + deletes) drive both the
-            # anti-join and partition pruning; plain merges skip the
-            # extra distinct and anti-join the source directly
-            src_keys = source.select(*keys).distinct()
-            flag = F.coalesce(when_matched_delete, F.lit(False))
-            source = source.filter(~flag)
-        else:
-            src_keys = None
+        # the whenMatchedDelete flag rides as a column, not a filter:
+        # delete rows drive the probe, the partition split and the
+        # rewrite join like upserts do, and are just never stored.
+        # Meta columns are contract-excluded from the payload.
+        source = source.withColumn(
+            _MERGE_DEL,
+            F.lit(False)
+            if when_matched_delete is None
+            else F.coalesce(when_matched_delete, F.lit(False)),
+        )
         if source_meta_cols:
             source = source.drop(*source_meta_cols)
-        source = self._apply_generated(source, m)
-        source = self._apply_defaults(source, m)
+        source = self._apply_defaults(self._apply_generated(source, m), m)
+        upserts = source.filter(~F.col(_MERGE_DEL)).drop(_MERGE_DEL)
         extra = (
             set(target.columns)
-            - set(source.columns)
+            - set(upserts.columns)
             - set(ident)
             - ({"_row_id"} if rt else set())
         )
@@ -4263,7 +4290,7 @@ class ParquetTable:
         # without the flag, an unexpected source column is a pipeline
         # bug surfaced loudly, not a silent DDL — exactly the append
         # path's merge_schema=True contract.
-        widened = set(source.columns) - set(target.columns)
+        widened = set(upserts.columns) - set(target.columns)
         if widened and not evolve_schema:
             raise ValueError(
                 f"merge source carries new columns {sorted(widened)}; "
@@ -4281,7 +4308,7 @@ class ParquetTable:
             )
         # enforce on the upsert payload only (delete rows and meta
         # columns already stripped): cost ∝ source, never the table
-        self._enforce_current(source, m, "MERGE")
+        self._enforce_current(upserts, m, "MERGE")
 
         if pruned:
             if dup_keys is not None and dup_keys.limit(1).count() > 0:
@@ -4293,27 +4320,17 @@ class ParquetTable:
             # values are URL-unescaped and source values rendered the way
             # Spark renders them (true/false, __HIVE_DEFAULT_PARTITION__
             # for null) so escaping/typing can never misclassify a
-            # touched partition as untouched.
-            # src_keys when deleting (delete-flagged rows rewrite their
-            # partitions too), the source itself otherwise
-            part_src = src_keys if src_keys is not None else source
+            # touched partition as untouched.  Delete-flagged rows
+            # rewrite their partitions too.
             touched = [
-                tuple(r) for r in part_src.select(*lpart).distinct().collect()
+                tuple(r) for r in source.select(*lpart).distinct().collect()
             ]
             touched_set = {tuple(_hive_value(v) for v in t) for t in touched}
-            keep_files, rewrite_files = [], []
-            for f in m["files"]:
-                pv = _partition_values(f, part_cols)
-                (rewrite_files if pv in touched_set else keep_files).append(f)
-            if rewrite_files:
-                # DV-aware read: merge must not resurrect rows a
-                # merge-on-read DELETE already masked in these files
-                target = self._read_files_dv(
-                    rewrite_files, m, with_row_ids=rt
-                )
-            else:
-                target = target.limit(0)
-            carried = keep_files
+            rewrite_files = [
+                f
+                for f in m["files"]
+                if _partition_values(f, part_cols) in touched_set
+            ]
         else:
             # Delta's touched-file scan (findTouchedFiles): even when the
             # merge keys don't subsume the partition columns, only files
@@ -4327,9 +4344,7 @@ class ParquetTable:
             # O(inserts) — never a full-table rewrite.  DV-aware on both
             # sides: masked rows neither mark a file touched nor get
             # resurrected by the rewrite.
-            probe_keys = (
-                src_keys if src_keys is not None else source.select(*keys)
-            ).distinct()
+            probe_keys = source.select(*keys).distinct()
             if dup_keys is not None:
                 # ride the dup flag on the probe keys so the guard and
                 # the touched-file scan share ONE collect; a flagged key
@@ -4393,15 +4408,9 @@ class ParquetTable:
             if dup_keys is not None and any(r["__dup"] for r in hit):
                 self._merge_dup_abort(dup_keys, target, keys)
             rewrite_files = sorted({r["__rel"] for r in hit})
-            if rewrite_files:
-                target = self._read_files_dv(
-                    rewrite_files, m, with_row_ids=rt
-                )
-            else:
-                target = target.limit(0)
-            carried = [f for f in m["files"] if f not in set(rewrite_files)]
+        carried = [f for f in m["files"] if f not in set(rewrite_files)]
 
-        if not rewrite_files and not widened and source.isEmpty():
+        if not rewrite_files and not widened and upserts.isEmpty():
             # skipRecordingEmptyCommits parity: no target file contains
             # a matched key and the upsert payload is empty (a
             # pure-delete source that matched nothing) — nothing can
@@ -4411,21 +4420,45 @@ class ParquetTable:
             # only runs on the already-rare zero-touched-file path.
             return m["version"]
 
-        # the matched-file rows feed the rewrite, the CDC pre-images,
-        # the matched-key projections, and (row-tracked / identity
-        # tables) the id-inheritance joins — persist so the commit pays
-        # ONE scan of its rewrite working set, not one per consumer.
-        # try/finally below: a commit conflict must not leak the cache.
-        target = target.persist()
+        # DV-aware read: merge must not resurrect rows a merge-on-read
+        # DELETE already masked in the rewrite files
+        target = (
+            self._read_files_dv(rewrite_files, m, with_row_ids=rt)
+            if rewrite_files
+            else target.limit(0)
+        )
+        # stored column order: the payload, then the inherited ids
+        src_cols = upserts.columns
+        out_cols = src_cols + (["_row_id"] if rt else []) + list(ident)
+        tgt = target.groupBy(*keys).agg(
+            F.collect_list(
+                F.struct(
+                    *[
+                        F.col(c)
+                        if c in target.columns
+                        else F.lit(None)
+                        .cast(upserts.schema[c].dataType)
+                        .alias(c)
+                        for c in out_cols
+                    ]
+                )
+            ).alias("__t")
+        )
+        src = source.groupBy(*keys).agg(
+            F.collect_list(F.struct(*src_cols, _MERGE_DEL)).alias("__s")
+        )
+        # the ONE frame both writes read: persisted so the data rewrite
+        # and the CDC sidecar see one evaluation of the source and one
+        # scan of the rewrite files.  try/finally below: a commit
+        # conflict must not leak the cache.
+        joined = tgt.join(src, keys, "full_outer").persist()
         try:
             return self._merge_publish(
                 m,
-                source,
-                keys,
-                target,
-                src_keys,
+                joined,
+                src_cols,
+                out_cols,
                 carried,
-                rewrite_files,
                 widened,
                 rt,
                 ident,
@@ -4434,17 +4467,15 @@ class ParquetTable:
                 extra_props,
             )
         finally:
-            target.unpersist()
+            joined.unpersist()
 
     def _merge_publish(
         self,
         m,
-        source,
-        keys,
-        target,
-        src_keys,
+        joined,
+        src_cols,
+        out_cols,
         carried,
-        rewrite_files,
         widened,
         rt,
         ident,
@@ -4452,103 +4483,84 @@ class ParquetTable:
         part_cols,
         extra_props,
     ) -> int:
-        """The write-and-commit tail of :meth:`merge`, split out so the
-        persisted ``target`` (the matched files' rows) is released by a
+        """The write-and-commit tail of :meth:`merge`: project the stored
+        rows and the CDC rows from the persisted one-row-per-key
+        ``joined`` frame (``__t`` target rows, ``__s`` source rows), write
+        both, commit.  Split out so ``joined`` is released by a
         try/finally even when the commit loses a conflict race."""
+        matched = F.col("__t").isNotNull()
+        has_src = F.col("__s").isNotNull()
+        ups = F.filter("__s", lambda x: ~x[_MERGE_DEL])
+        id_cols = out_cols[len(src_cols):]
 
-        # identity attach: matched source rows inherit their target
-        # row's identity values (one key-join against the already-read
-        # rewrite rows); unmatched rows draw a fresh contiguous range
-        # from the high water, which this commit advances.  A concurrent
-        # identity append aborts this merge on version collision
-        # (_commit_typed), so the reservation can never double-allocate.
-        if rt:
-            # matched source rows ARE their target rows post-update:
-            # inherit the stable id via one key-join (the identity
-            # inheritance pattern); unmatched (insert) rows stay NULL
-            rid_map = target.select(
-                *keys, F.col("_row_id").alias("__rt_rid")
+        def _stored(x, i):
+            # a stored source row inherits the ids of the target row at
+            # its position in the key group (a key-unique target has one;
+            # update_where_in's duplicate-key groups pair row for row);
+            # rows past the group's end and inserts get NULL ids
+            tx = F.try_element_at(F.col("__t"), i + 1)
+            return F.struct(
+                *[x[c].alias(c) for c in src_cols],
+                *[tx[c].alias(c) for c in id_cols],
             )
-            source = (
-                source.join(rid_map, keys, "left")
-                .withColumn("_row_id", F.col("__rt_rid"))
-                .drop("__rt_rid")
-            )
+
+        # ONE projection yields the stored rows (so the data write keeps
+        # the joined frame's partitioning): a key with source rows
+        # stores its non-delete source rows, a key without keeps __t
+        rows = joined.select(
+            F.explode(
+                F.when(has_src, F.transform(ups, _stored)).otherwise(
+                    F.col("__t")
+                )
+            ).alias("__r"),
+            matched.alias("__m"),
+            has_src.alias("__new"),
+        ).select("__r.*", "__m", "__new")
         id_bases: dict = {}
         n_fresh = 0
         if ident:
-            id_map = target.select(
-                *keys, *[F.col(c).alias(f"__mrg_id_{c}") for c in ident]
-            )
-            matched_src = source.join(id_map, keys, "inner").select(
-                *source.columns,
-                *[F.col(f"__mrg_id_{c}").alias(c) for c in ident],
-            )
-            unmatched_src = source.join(id_map.select(*keys), keys, "anti")
-            n_fresh = unmatched_src.count()
-            fresh, id_bases = self._assign_identity(unmatched_src, ident, m)
-            # localCheckpoint pins the assigned ids: the enriched source
-            # feeds TWO write jobs (data files + CDC sidecar), and
-            # monotonically_increasing_id would re-roll between them
-            source = matched_src.unionByName(
-                fresh.select(*matched_src.columns)
-            ).localCheckpoint()
-
-        # anti against ALL source keys: a matched target row disappears
-        # whether its source row is an upsert (replaced below) or a
-        # delete (never re-inserted)
-        merged = (
-            target.join(
-                src_keys if src_keys is not None else source, keys, "left_anti"
-            )
-            .unionByName(source, allowMissingColumns=True)
-            .select(*source.columns)
-        )
+            # stored rows with no inherited identity draw a fresh
+            # contiguous range from the high water, which this commit
+            # advances.  A concurrent identity append aborts this merge
+            # on version collision (_commit_typed), so the reservation
+            # can never double-allocate.  localCheckpoint pins the drawn
+            # ids: the data and CDC writes both read them, and
+            # monotonically_increasing_id would re-roll between the two
+            need = F.col(next(iter(ident))).isNull()
+            fresh_src = rows.filter(need).drop(*ident)
+            n_fresh = fresh_src.count()
+            fresh, id_bases = self._assign_identity(fresh_src, ident, m)
+            rows = rows.filter(~need).unionByName(fresh.localCheckpoint())
+        merged = rows.drop("__m", "__new")
         if rt:
             merged = merged.withColumnRenamed("_row_id", _ROW_ID_PHYS)
         data_root = os.path.join(self.root, _DATA_DIR)
-        # CDC sidecar (Delta CDF parity for MERGE): the exact row-level
-        # delta — matched target pre-images (update_preimage, or delete
-        # for CDC-delete keys), matched source post-images, and inserts.
-        # Every frame is a key-join against rows ALREADY read for the
-        # rewrite (target = the matched files only), so sidecar cost is
-        # ∝ the change, and the streaming CDF source can consume
-        # MERGE-maintained tables instead of refusing their commits.
-        all_keys = src_keys if src_keys is not None else source.select(*keys).distinct()
-        upsert_keys = source.select(*keys).distinct()
-        # one flagged-key join per side (not four semi/anti joins): the
-        # target side tags pre-images update_preimage vs delete by
-        # whether the key has an upsert row; the source side tags
-        # update_postimage vs insert by whether the key matched a
-        # target row.  AQE broadcasts the key frames when small.
-        key_flags = all_keys.join(
-            upsert_keys.withColumn("__u", F.lit(True)), keys, "left"
-        ).select(*keys, F.coalesce(F.col("__u"), F.lit(False)).alias("__u"))
-        pre = target.join(key_flags, keys, "inner").withColumn(
-            "_change_type",
-            F.when(F.col("__u"), F.lit("update_preimage")).otherwise(
-                F.lit("delete")
-            ),
+        # CDC sidecar (Delta CDF parity for MERGE), projected from the
+        # same frame: matched target rows are update_preimage (or delete
+        # when their key stores no source row), stored source rows are
+        # update_postimage (key matched) or insert.  Row-tracked tables
+        # keep ``_row_id`` on every sidecar row so the sidecar can serve
+        # changes_between(with_row_ids=True) — see _commit's cdc_row_ids
+        pre = joined.filter(matched & has_src).select(
+            F.explode("__t").alias("__r"),
+            F.when(F.size(ups) > 0, F.lit("update_preimage"))
+            .otherwise(F.lit("delete"))
+            .alias("_change_type"),
+        ).select("__r.*", "_change_type")
+        post = rows.filter(F.col("__new")).select(
+            *out_cols,
+            F.when(F.col("__m"), F.lit("update_postimage"))
+            .otherwise(F.lit("insert"))
+            .alias("_change_type"),
         )
-        tgt_keys = target.select(*keys).distinct()
-        post = source.join(
-            tgt_keys.withColumn("__m", F.lit(True)), keys, "left"
-        ).withColumn(
-            "_change_type",
-            F.when(
-                F.coalesce(F.col("__m"), F.lit(False)),
-                F.lit("update_postimage"),
-            ).otherwise(F.lit("insert")),
-        )
-        # row-tracked tables keep the stable ``_row_id`` on every sidecar
-        # row (pre-images carry the target's id, post-images/inserts the
-        # id the rewrite materializes) so the sidecar can serve
-        # changes_between(with_row_ids=True) directly — see _commit's
-        # cdc_row_ids
-        cdc_df = pre.unionByName(post, allowMissingColumns=True).select(
-            *[c for c in source.columns if rt or c != "_row_id"],
-            "_change_type",
-        )
+        cdc_df = pre.unionByName(post)
+        if not part_cols:
+            # AQE never coalesces inside a cached plan, so the joined
+            # frame keeps every shuffle partition: let each write's own
+            # AQE rebalance size its files (partitioned writes already
+            # rebalance by partition value) — else a small MERGE lands
+            # one file per shuffle partition
+            merged, cdc_df = merged.hint("rebalance"), cdc_df.hint("rebalance")
         # row-level operation metrics ride the CDC write action itself
         # (observe = CollectMetrics, zero extra Spark actions): the CDC
         # frame already enumerates exactly the updated / inserted /
@@ -4560,22 +4572,18 @@ class ParquetTable:
         cdc_obs = Observation()
         cdc_df = cdc_df.observe(
             cdc_obs,
-            F.sum(
-                F.when(
-                    F.col("_change_type") == "update_postimage", 1
-                ).otherwise(0)
-            ).alias("__u"),
-            F.sum(
-                F.when(F.col("_change_type") == "insert", 1).otherwise(0)
-            ).alias("__i"),
-            F.sum(
-                F.when(F.col("_change_type") == "delete", 1).otherwise(0)
-            ).alias("__d"),
+            *[
+                F.sum((F.col("_change_type") == t).cast("long")).alias(a)
+                for t, a in (
+                    ("update_postimage", "__u"),
+                    ("insert", "__i"),
+                    ("delete", "__d"),
+                )
+            ],
         )
-        # the data rewrite and the CDC sidecar both read the persisted
-        # target scan + the caller-materialized source: two independent
-        # actions that overlap in driver threads instead of paying two
-        # serial plan/codegen/schedule floors
+        # two independent actions over the persisted joined frame,
+        # overlapped in driver threads instead of paying two serial
+        # plan/codegen/schedule floors
         files, cdc_files = _write_files_concurrent(
             (
                 _to_physical_df(merged, m),
@@ -5834,10 +5842,10 @@ def _write_files_concurrent(
     (variant shredding / optimize-write advisory size), so any spec
     whose frame carries a VARIANT column or whose kwargs set
     ``optimize_write`` demotes the whole batch to the sequential
-    path.  Callers must pass frames whose expensive parents are
-    already materialized (persisted scans touched by the probe /
-    constraint action, or localCheckpointed merge sources) — the
-    engine's DML paths already guarantee that for scan-sharing."""
+    path.  Callers must pass frames derived from ONE persisted parent
+    (the DML marked scans, MERGE's joined frame): then every sink reads
+    the same evaluation — a nondeterministic column agrees across
+    sinks — and no sink recomputes another's input."""
     safe = all(
         not kw.get("optimize_write")
         and not any(
@@ -5846,8 +5854,6 @@ def _write_files_concurrent(
         )
         for df, kw in specs
     )
-    if os.environ.get("SPARK_GRAFT_SEQ_WRITES"):
-        safe = False  # operational kill-switch (and the A/B lever)
     if len(specs) < 2 or not safe:
         return [_write_files(df, **kw) for df, kw in specs]
     from concurrent.futures import ThreadPoolExecutor

@@ -148,6 +148,24 @@ def test_update_where_in_routes_preserve_ids(tracked, spark):
     assert after == before
 
 
+def test_update_where_in_duplicate_key_group_keeps_rows_and_ids(
+    spark, tmp_path
+):
+    # a duplicate-key group {r1, r2} is replaced row for row: two
+    # post-images, each keeping one of the group's ids
+    t = ParquetTable.create(
+        spark,
+        str(tmp_path / "t"),
+        spark.createDataFrame([(1, 10), (1, 11), (2, 20)], "k long, v long"),
+    )
+    t.set_properties({"delta.enableRowTracking": "true"})
+    group = {r._row_id for r in t.read(with_row_ids=True).collect() if r.k == 1}
+    t.update_where_in("k", spark.createDataFrame([(1,)], "k long"), {"v": F.col("v") + 100})
+    rows = [r for r in t.read(with_row_ids=True).collect() if r.k == 1]
+    assert sorted(r.v for r in rows) == [110, 111]
+    assert {r._row_id for r in rows} == group
+
+
 def test_disable_then_reenable_reallocates(tracked):
     ids0 = _ids(tracked)
     tracked.set_properties({"delta.enableRowTracking": "false"})

@@ -54,3 +54,25 @@ def test_spread_byte_gate_skips_large_underpartitioned_input(
     assert docs.rdd.getNumPartitions() == 1
     monkeypatch.setattr(catalog, "_SPREAD_MAX_BYTES", 1)
     assert catalog.spread(docs, "doc_id") is docs
+
+
+def test_spread_fails_closed_when_stats_raise(spark, monkeypatch):
+    # no size estimate means the byte gate cannot rule out an
+    # input-wide shuffle: spread must leave the frame untouched
+    df = spark.range(0, 100, 1, numPartitions=1).select(
+        F.col("id").alias("doc_id")
+    )
+    assert df.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+
+    class _NoStats:
+        def __init__(self, jdf):
+            self._inner = jdf
+
+        def queryExecution(self):
+            raise RuntimeError("plan stats unavailable")
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+    monkeypatch.setattr(df, "_jdf", _NoStats(df._jdf))
+    assert spread(df, "doc_id") is df

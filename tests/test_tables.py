@@ -948,3 +948,77 @@ def test_update_where_in_rewrites_only_touched_files(spark, root):
     assert untouched <= after  # p1/p3 carried by reference
     assert not any("part=p2" in f for f in before & after)  # p2 rewritten
     assert _as_dict(t.read()) == {1: ("p1", "a"), 2: ("p2", "B!"), 3: ("p3", "c")}
+
+
+# -- CDC rows equal the committed rows ----------------------------------------
+
+
+def _stamp(spark, data, ddl="k int, v string, op string"):
+    """Source rows whose ``ts`` is ``current_timestamp()`` — a value each
+    Spark action evaluates afresh."""
+    return spark.createDataFrame(data, ddl).withColumn(
+        "ts", F.current_timestamp()
+    )
+
+
+def _dml_merge(t, spark):
+    t.merge(_stamp(spark, [(1, "u", None), (3, "i", None)]).drop("op"), on=["k"])
+
+
+def _dml_merge_delete(t, spark):
+    t.merge(
+        _stamp(spark, [(1, "u", "U"), (2, None, "D"), (3, "i", "U")]),
+        on=["k"],
+        when_matched_delete=F.col("op") == "D",
+        source_meta_cols=["op"],
+    )
+
+
+def _dml_update(mode):
+    def run(t, spark):
+        t.update("k = 1", {"v": F.lit("u"), "ts": F.current_timestamp()}, mode=mode)
+
+    return run
+
+
+@pytest.mark.parametrize(
+    "dml, row_tracked, want",
+    [
+        (_dml_merge, False, (1, 1, 0)),
+        (_dml_merge_delete, False, (1, 1, 1)),
+        (_dml_merge, True, (1, 1, 0)),
+        (_dml_update("copy-on-write"), False, (1, 0, 0)),
+        (_dml_update("merge-on-read"), False, (1, 0, 0)),
+    ],
+    ids=["merge", "merge-delete", "merge-row-tracked", "update-cow", "update-mor"],
+)
+def test_cdc_rows_equal_committed_rows(spark, root, dml, row_tracked, want):
+    """Every CDC post-image and insert row a DML commit writes is a row
+    the same commit stores — even when the new values come from a
+    nondeterministic expression such as ``current_timestamp()``, which
+    the data write and the CDC write would each re-evaluate if they
+    did not share one evaluated frame."""
+    t = ParquetTable.create(
+        spark,
+        root,
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (4, "d")], "k int, v string"
+        ).withColumn("ts", F.lit("2020-01-01 00:00:00").cast("timestamp")),
+    )
+    if row_tracked:
+        t.set_properties({"delta.enableRowTracking": "true"})
+    dml(t, spark)
+    m = t._manifest()
+    cols = ["k", "v", "ts"] + (["_row_id"] if row_tracked else [])
+    stored = {tuple(r[c] for c in cols) for r in t.read(with_row_ids=row_tracked).collect()}
+    cdc = t._read_cdc_files(m["cdc_files"]).collect()
+    new = [r for r in cdc if r["_change_type"] in ("update_postimage", "insert")]
+    assert new
+    for r in new:
+        # an insert's stable id is drawn by the data write, not the sidecar
+        got = [r[c] for c in cols if c != "_row_id" or r["_change_type"] != "insert"]
+        assert any(list(s[: len(got)]) == got for s in stored), r
+    metrics = t.history(limit=1)[0].metrics
+    assert tuple(
+        metrics.get(k, 0) for k in ("rows_updated", "rows_inserted", "rows_deleted")
+    ) == want
