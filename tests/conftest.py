@@ -32,6 +32,15 @@ def spark(tmp_path_factory):
             # there.
             "spark.sql.codegen.wholeStage": "false",
             "spark.sql.codegen.factoryMode": "NO_CODEGEN",
+            # no stage progress bars: the suite runs tens of thousands of
+            # stages, and the bars only add a polling thread and carriage
+            # return noise to the captured log
+            "spark.ui.showConsoleProgress": "false",
+            # list a read's files on the driver instead of a Spark job
+            # when it names more than 32 paths (Spark's default): the
+            # test tables are local and small, so the listing job is
+            # pure scheduling overhead on every many-file read
+            "spark.sql.sources.parallelPartitionDiscovery.threshold": "100000",
         },
     )
     yield s
