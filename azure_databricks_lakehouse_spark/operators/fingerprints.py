@@ -268,7 +268,14 @@ def fingerprint_overlap_pairs(
     fingerprints, so a count cut either misses short quotes or keeps
     near-all-pairs.  Containment normalizes by the smaller document and
     cleanly separates 'B quotes A' (score near 1) from vocabulary overlap
-    (low score)."""
+    (low score).
+
+    ``flat`` is read up to four times (the cull, both self-join sides,
+    the containment counts), so it is pinned once with an eager
+    ``localCheckpoint``: every consumer scans the stored partitions
+    instead of re-deriving the fingerprints (per-consumer column pruning
+    otherwise defeats exchange reuse)."""
+    flat = flat.localCheckpoint(eager=True)
     if max_doc_frac is not None or max_doc_freq is not None:
         if max_doc_freq is not None:
             flat = _cull_hot_fps(flat, max_doc_freq)

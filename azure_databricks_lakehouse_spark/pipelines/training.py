@@ -282,7 +282,13 @@ def prepare_training_corpus(
     # star algorithm by default: containment chains (v1 quotes v2 quotes
     # v3 ...) give label propagation diameter-many rounds and a
     # ConvergenceError past max_iter; large-star/small-star closes any
-    # diameter in O(log n) rounds
+    # diameter in O(log n) rounds.  The stage costs a fixed handful of
+    # Spark jobs: the pair join pins the fingerprint table once, the star
+    # loop stops at its first star-forest round (dup clusters of 2-3
+    # docs are usually one round), and `losers` never reads
+    # `cluster_size`, so its window is pruned from the plan.  No
+    # checkpoint is added here: each one in this function ends an
+    # audited stage.
     clusters = dedup_clusters(
         pairs.select("doc_a", "doc_b"), algorithm=cc_algorithm
     )

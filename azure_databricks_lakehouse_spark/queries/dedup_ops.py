@@ -644,20 +644,9 @@ def q51_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # _variant_corpus text is already normalized (matches _CORPUS_SQL's
     # base CTE), so no extra normalization layer here.
     corpus = _variant_corpus(spark, sf_dir)
-    # MATERIALIZE the long-format fingerprint frame once per invocation:
-    # fingerprint_overlap_pairs reads it FOUR times (doc-freq cull, both
-    # self-join sides, containment counts), and per-consumer column
-    # pruning below the exchange defeats ReuseExchange (measured: 0
-    # reused, 24 scans when computed inline).  localCheckpoint computes
-    # the winnow projection exactly once INSIDE the timed region — the
-    # round-5..12 versioned-table cache keyed on the source file's
-    # size+mtime persisted the fingerprints ACROSS bench invocations,
-    # which this optimization round's rules treat as cross-run result
-    # caching, so round 13 replaced it with the in-session materialization
-    # (same exchange-sharing benefit, recomputed from parquet every run).
     flat = winnow_fingerprints_long(
         corpus, k=_WINNOW_K, w=_WINNOW_W, hash="poly", cluster_by_fp=True
-    ).localCheckpoint()
+    )
     return fingerprint_overlap_pairs(
         flat,
         min_shared=_OVERLAP_MIN,

@@ -46,6 +46,24 @@ def spark(tmp_path_factory):
     yield s
 
 
+@pytest.fixture()
+def codegen_on(spark):
+    """Spark's default codegen settings for one test: the suite's session
+    (``spark`` above) runs interpreted, production sessions do not."""
+    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
+    saved = {k: spark.conf.get(k, None) for k in keys}
+    for k in keys:
+        spark.conf.unset(k)
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

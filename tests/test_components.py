@@ -8,6 +8,7 @@ import pytest
 
 from azure_databricks_lakehouse_spark.operators.components import (
     ConvergenceError,
+    _is_star_forest,
     connected_components,
     connected_components_star,
     dedup_clusters,
@@ -16,6 +17,23 @@ from azure_databricks_lakehouse_spark.operators.components import (
 
 def _edges(spark, pairs):
     return spark.createDataFrame(pairs, "src bigint, dst bigint")
+
+
+def _jobs_without_aqe(spark, group, action):
+    """Run ``action`` and return the number of Spark jobs it submitted.
+    AQE runs every shuffle stage as its own job, which would make the
+    count measure plan depth instead of driver actions — it is disabled
+    so jobs ~= actions."""
+    sc = spark.sparkContext
+    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setJobGroup(None, None)
+        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def test_transitive_chain_collapses(spark):
@@ -110,22 +128,37 @@ def test_label_propagation_job_count(spark):
     3 (join-count + re-materialization).  A 3-edge clique converges in
     2 rounds; allow generous slack for the input checkpoint and final
     collect but fail if per-round cost doubles."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    group = "cc-jobcount"
-    aqe_prev = spark.conf.get("spark.sql.adaptive.enabled")
-    # AQE runs every shuffle stage as its own job, which would make the
-    # count measure plan depth instead of driver actions — disable it so
-    # jobs ~= actions.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    sc.setJobGroup(group, "cc job-count test")
-    try:
-        comp = connected_components(_edges(spark, [(1, 2), (2, 3), (1, 3)]))
-        comp.collect()
-    finally:
-        sc.setJobGroup(None, None)
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_prev)
-    jobs = tracker.getJobIdsForGroup(group)
+    comp = connected_components(_edges(spark, [(1, 2), (2, 3), (1, 3)]))
+    n_jobs = _jobs_without_aqe(spark, "cc-jobcount", comp.collect)
     # 2 rounds x 2 jobs + input-derivation + final collect = ~6; the old
     # shape (count-join + lazy checkpoint re-run) was ~3 per round.
-    assert len(jobs) <= 8, f"CC loop ran {len(jobs)} jobs for a 2-round graph"
+    assert n_jobs <= 8, f"CC loop ran {n_jobs} jobs for a 2-round graph"
+
+
+def test_star_stops_at_first_star_forest(spark):
+    """A graph that already is a star forest closes in ONE round: the
+    round's checkpoint, the star-forest probe and the final collect are
+    3 jobs (AQE off).  A loop that needs a second, confirming round to
+    see its output repeat costs 5, which the bound of 4 rejects."""
+    rows = []
+    comp = connected_components_star(_edges(spark, [(1, 2), (1, 3), (10, 11)]))
+    n_jobs = _jobs_without_aqe(
+        spark, "cc-star-jobcount", lambda: rows.extend(comp.collect())
+    )
+    assert {r["node"]: r["component_id"] for r in rows} == {
+        1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
+    }
+    assert n_jobs <= 4, f"star loop ran {n_jobs} jobs for a star forest"
+
+
+@pytest.mark.parametrize(
+    "edges, converged",
+    [
+        ([(5, 1), (5, 2)], False),  # a child with two centres
+        ([(3, 1), (1, 0)], False),  # a centre that is also a child
+        ([(2, 1), (3, 1)], True),
+    ],
+)
+def test_star_forest_predicate(spark, edges, converged):
+    df = spark.createDataFrame(edges, "a bigint, b bigint")
+    assert _is_star_forest(df) is converged

@@ -289,24 +289,6 @@ def test_quarantine_replay_is_idempotent(spark, lake, tmp_path):
     assert ParquetTable.for_path(spark, lake.quarantine).read().count() == q1
 
 
-@pytest.fixture()
-def codegen_on(spark):
-    """Spark's default codegen settings for one test: the suite's session
-    runs interpreted (``tests/conftest.py``), production sessions do not."""
-    keys = ("spark.sql.codegen.wholeStage", "spark.sql.codegen.factoryMode")
-    saved = {k: spark.conf.get(k, None) for k in keys}
-    for k in keys:
-        spark.conf.unset(k)
-    try:
-        yield
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
-
-
 def test_medallion_with_codegen_on(spark, lake, tmp_path, codegen_on):
     """Bronze → silver → gold, day 1 then day 2, with whole-stage and
     expression codegen at Spark's defaults — the MERGE and dim-refresh

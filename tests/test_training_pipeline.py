@@ -5,6 +5,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from azure_databricks_lakehouse_spark.operators.fingerprints import (
+    fingerprint_overlap_pairs,
+    winnow_fingerprints_long,
+)
 from azure_databricks_lakehouse_spark.pipelines.training import (
     prepare_training_corpus,
 )
@@ -39,7 +43,7 @@ def _run(spark, **kw):
     return prepare_training_corpus(docs, benchmark=bench, **kw)
 
 
-def test_each_stage_culls_its_offender(spark):
+def _assert_each_stage_culls_its_offender(spark):
     res = _run(spark)
     assert res.audit["input"] == 6
     assert res.audit["quality"] == 5          # doc 5 gone
@@ -48,6 +52,55 @@ def test_each_stage_culls_its_offender(spark):
     assert res.audit["decontaminate"] == 2    # doc 6 gone
     survivors = {r["doc_id"] for r in res.corpus.select("doc_id").collect()}
     assert survivors == {1, 4}
+
+
+def test_each_stage_culls_its_offender(spark):
+    _assert_each_stage_culls_its_offender(spark)
+
+
+def test_each_stage_culls_its_offender_codegen_on(spark, codegen_on):
+    """The same pass under whole-stage and expression codegen, as
+    production sessions compile it — including the window rounds of
+    the star connected-components loop and the pinned fingerprint
+    table of the pair join."""
+    assert spark.conf.get("spark.sql.codegen.wholeStage") == "true"
+    _assert_each_stage_culls_its_offender(spark)
+
+
+def _words(tag: str, n: int) -> str:
+    """``n`` seeded random-letter words, stopword-laced so the quality
+    gate passes; different tags share no winnowing fingerprint beyond
+    the stopword glue."""
+    import random
+    import string
+
+    rng = random.Random(tag)
+    words = [
+        "".join(rng.choices(string.ascii_lowercase, k=7)) for _ in range(n)
+    ]
+    return " of the ".join(words)
+
+
+def test_fuzzy_dedup_collapses_containment_chain(spark):
+    """B quotes A whole, C quotes the back half of B, and C shares no
+    passage with A: the pairs are (A, B) and (B, C) only, yet all three
+    are one cluster and only its smallest id survives.  The ids put the
+    cluster minimum at A and give C a smaller id than B, so a pairwise
+    "drop the larger of each pair" rule would wrongly keep C."""
+    p1, p2, p3, p4, p5 = (_words(f"chain-{i}", 12) for i in range(5))
+    a = f"{p1} and {p2}"
+    b = f"{p1} and {p2} and {p3} and {p4}"
+    c = f"{p3} and {p4} and {p5}"
+    docs = spark.createDataFrame([(1, a), (3, b), (2, c)], "doc_id int, text string")
+    flat = winnow_fingerprints_long(docs, cluster_by_fp=True)
+    pairs = fingerprint_overlap_pairs(
+        flat, min_shared=2, min_containment=0.5, max_doc_freq=50
+    )
+    assert {(r["doc_a"], r["doc_b"]) for r in pairs.collect()} == {(1, 3), (2, 3)}
+    res = prepare_training_corpus(docs)
+    assert res.audit["exact_dedup"] == 3
+    assert res.audit["fuzzy_dedup"] == 1
+    assert {r["doc_id"] for r in res.corpus.select("doc_id").collect()} == {1}
 
 
 def test_pii_is_scrubbed_from_survivors(spark):
