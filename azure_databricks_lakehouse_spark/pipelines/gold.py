@@ -38,6 +38,7 @@ tables are single hash aggregates with map-side partials.
 from __future__ import annotations
 
 from dataclasses import dataclass
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -78,9 +79,32 @@ def _write(spark: SparkSession, root: str, df: DataFrame, partition_by=None) -> 
 def build_dim_date(
     spark: SparkSession, paths: LakehousePaths, start: str, end: str
 ) -> DataFrame:
-    dim = build_date_dim(spark, start, end)
-    _write(spark, paths.dim_date, dim)
+    """The calendar dim over ``[start, end]``.  A stored dim that
+    already covers the range is returned as it is: an identical
+    overwrite would cost a commit and a write per run."""
+    if not _dim_date_covers(spark, paths.dim_date, start, end):
+        _write(spark, paths.dim_date, build_date_dim(spark, start, end))
     return ParquetTable.for_path(spark, paths.dim_date).read()
+
+
+def _dim_date_covers(spark: SparkSession, root: str, start: str, end: str) -> bool:
+    """Whether the stored date dim holds every day of ``[start, end]``,
+    decided from the manifest alone (no Spark job): the footer min/max
+    of ``date_key`` (yyyymmdd; DATE columns carry no footer stats)
+    bound the range, and a row count of exactly one row per day in
+    that range rules out a gap."""
+    if not is_table(root):
+        return False
+    table = ParquetTable.for_path(spark, root)
+    rng = table.footer_range("date_key")
+    if rng is None:
+        return False
+    lo, hi = (date(k // 10000, k // 100 % 100, k % 100) for k in rng)
+    return (
+        lo <= date.fromisoformat(start)
+        and date.fromisoformat(end) <= hi
+        and table.count() == (hi - lo).days + 1
+    )
 
 
 def _member_attrs(members: DataFrame) -> DataFrame:
@@ -107,29 +131,55 @@ def _provider_attrs(providers: DataFrame) -> DataFrame:
     )
 
 
+# one conformed SCD1 dim: (silver source, dim table, attrs projection,
+# surrogate key, business key, the claim column that references it)
+_MEMBER = (
+    "silver_members",
+    "dim_member",
+    _member_attrs,
+    "member_sk",
+    "member_key",
+    "member_id",
+)
+_PROVIDER = (
+    "silver_providers",
+    "dim_provider",
+    _provider_attrs,
+    "provider_sk",
+    "provider_key",
+    "provider_id",
+)
+
+
+def _refresh_dim(
+    spark: SparkSession,
+    paths: LakehousePaths,
+    dim: tuple,
+    claims: DataFrame | None = None,
+) -> DataFrame:
+    """Refresh one dim from its silver source (:func:`_scoped_dim_refresh`).
+    ``claims`` scopes the refresh to the business keys those claim rows
+    reference once the dim exists; the first build is always full."""
+    silver_attr, dim_attr, project, sk_name, business_key, claim_col = dim
+    root = getattr(paths, dim_attr)
+    attrs = project(ParquetTable.for_path(spark, getattr(paths, silver_attr)).read())
+    if claims is not None and is_table(root):
+        batch_keys = claims.select(F.col(claim_col).alias(business_key)).distinct()
+        attrs = attrs.join(batch_keys, business_key, "semi")
+    return _scoped_dim_refresh(
+        spark, root, attrs, sk_name, business_key=business_key
+    )
+
+
 def build_dim_member(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
     """SCD1 member dim (``gold/gold_rx_claims_load.py:87-108``; the pattern
     doc says SCD2 at ``bronze_silver_gold/readme.md:56`` — code wins,
     SURVEY.md §7.3)."""
-    members = ParquetTable.for_path(spark, paths.silver_members).read()
-    return _scoped_dim_refresh(
-        spark,
-        paths.dim_member,
-        _member_attrs(members),
-        "member_sk",
-        business_key="member_key",
-    )
+    return _refresh_dim(spark, paths, _MEMBER)
 
 
 def build_dim_provider(spark: SparkSession, paths: LakehousePaths) -> DataFrame:
-    providers = ParquetTable.for_path(spark, paths.silver_providers).read()
-    return _scoped_dim_refresh(
-        spark,
-        paths.dim_provider,
-        _provider_attrs(providers),
-        "provider_sk",
-        business_key="provider_key",
-    )
+    return _refresh_dim(spark, paths, _PROVIDER)
 
 
 def _scoped_dim_refresh(
@@ -483,42 +533,9 @@ def stream(
         # dim refresh ∝ batch keys: semi-join the silver dims' sources
         # on the batch's member/provider ids; the first trigger (no dim
         # table yet) does the one full build, matching the batch path.
-        if is_table(paths.dim_member):
-            members = ParquetTable.for_path(sess, paths.silver_members).read()
-            dim_member = _scoped_dim_refresh(
-                sess,
-                paths.dim_member,
-                _member_attrs(members).join(
-                    latest.select(
-                        F.col("member_id").alias("member_key")
-                    ).distinct(),
-                    "member_key",
-                    "semi",
-                ),
-                "member_sk",
-                business_key="member_key",
-            )
-        else:
-            dim_member = build_dim_member(sess, paths)
-        if is_table(paths.dim_provider):
-            providers = ParquetTable.for_path(
-                sess, paths.silver_providers
-            ).read()
-            dim_provider = _scoped_dim_refresh(
-                sess,
-                paths.dim_provider,
-                _provider_attrs(providers).join(
-                    latest.select(
-                        F.col("provider_id").alias("provider_key")
-                    ).distinct(),
-                    "provider_key",
-                    "semi",
-                ),
-                "provider_sk",
-                business_key="provider_key",
-            )
-        else:
-            dim_provider = build_dim_provider(sess, paths)
+        dim_member, dim_provider = (
+            _refresh_dim(sess, paths, dim, latest) for dim in (_MEMBER, _PROVIDER)
+        )
         dim_date = ParquetTable.for_path(sess, paths.dim_date).read()
         upserts = latest.filter(
             F.col("_change_type") != "delete"

@@ -80,15 +80,16 @@ def q19_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
       no-op — the oracle would catch any drift).
     - ``part='update_in'`` (round-9): the snapshot after
       ``UPDATE ... WHERE o_orderkey IN (SELECT ...)`` — the IN-subquery
-      UPDATE rewrite (:meth:`~.tables.ParquetTable.update_where_in`,
-      update-only MERGE with row-wise post-images).  The key set mixes
-      matching keys (÷8), a key no row has (-1), and a NULL (never
-      matches) so the no-op and null-drop semantics are oracle-checked,
-      not just unit-tested.
+      UPDATE (:meth:`~.tables.ParquetTable.update_where_in`: the
+      row-wise UPDATE core with a key-membership row marker).  The key
+      set mixes matching keys (÷8), a key no row has (-1), and a NULL
+      (never matches) so the no-op and null-drop semantics are
+      oracle-checked, not just unit-tested.
 
     ``part='merge'`` reads its manifest BEFORE the update commits; the
-    update's rewrite leaves the old version's files on disk (time
-    travel owns them), so the lazy pre-update frame stays readable.
+    update leaves the old version's files on disk (time travel owns
+    them; a new deletion vector belongs to the new version only), so
+    the lazy pre-update frame stays readable.
     """
     t = bind(spark, sf_dir, "orders")
     root = _scratch(sf_dir, "merge_upsert")

@@ -4008,12 +4008,7 @@ class Lakehouse:
             return self._delete_in_subquery(name, sub)
         ex = self._parse_exists(name, cond)
         if ex is not None:
-            tcols, keys, neg = ex
-            if neg:
-                return self._delete_not_matching(
-                    name, tcols, keys, null_aware=False
-                )
-            return self._delete_in_keys(name, tcols, keys)
+            return self._delete_members(name, *ex, null_aware=False)
         corr: list = []
         if _ci(r"\(\s*SELECT\b").search(_mask_strings(cond)):
             # not a whole-predicate membership form: fold UNCORRELATED
@@ -4032,19 +4027,30 @@ class Lakehouse:
                     "conditions use MERGE ... WHEN MATCHED [AND p] "
                     "THEN DELETE"
                 )
+        return self._dml_result(
+            name,
+            "DELETE",
+            lambda t: t.delete(
+                CorrelatedCondition(tuple(corr), cond) if corr else cond
+            ),
+        )
+
+    def _dml_result(self, name: str, op: str, run) -> DataFrame:
+        """Run one DELETE / UPDATE (``run(table) -> version``) and shape
+        its statement result.  ``num_affected_rows`` is the fresh
+        commit's row metric; ``version > before`` tells a fresh commit
+        from a zero-match statement that committed nothing
+        (skipRecordingEmptyCommits) but whose latest commit happens to
+        be the same operation, which reports 0."""
         table = self.table(name)
         before = table.latest_version()
-        version = table.delete(
-            CorrelatedCondition(tuple(corr), cond) if corr else cond
-        )
+        version = run(table)
         c = table.history(limit=1)[0]
-        # version > before distinguishes a fresh commit from a
-        # zero-match no-commit whose latest version happens to also be
-        # a DELETE (skipRecordingEmptyCommits)
+        metric = "rows_deleted" if op == "DELETE" else "rows_updated"
         n = (
-            (c.metrics or {}).get("rows_deleted", 0)
-            if version > before and c.operation == "DELETE"
-            else 0  # zero-match delete commits nothing
+            (c.metrics or {}).get(metric, 0)
+            if version > before and c.operation == op
+            else 0
         )
         return self.spark.createDataFrame(
             [(name, version, n)],
@@ -4054,63 +4060,30 @@ class Lakehouse:
     def _delete_in_subquery(self, name: str, sub) -> DataFrame:
         """``DELETE FROM t WHERE col [NOT] IN (SELECT ...)`` —
         Databricks supports subquery predicates in DELETE; a row-wise
-        Column can't express a semi/anti join, so IN routes to the
-        table layer's delete-only MERGE (``when_matched_delete``) and
-        NOT IN to :meth:`~.tables.ParquetTable.delete_where_not_in`
-        (NULL-aware: any NULL subquery key ⇒ delete nothing, the SQL
-        three-valued contract).  NULL subquery keys are dropped from
-        the IN form first (``NULL = NULL`` never matches)."""
-        tcols = self._in_cols(sub)
+        Column can't express a semi/anti join, so both forms go to the
+        table layer's key-membership DELETE (:meth:`_delete_members`).
+        NOT IN is NULL-aware: any NULL subquery key ⇒ delete nothing,
+        the SQL three-valued contract; IN drops NULL subquery keys
+        (``NULL = NULL`` never matches)."""
         keys = self._run_query(sub.group("sub"))
-        if sub.group("neg"):
-            return self._delete_not_matching(
-                name, tcols, keys, null_aware=True
-            )
-        return self._delete_in_keys(name, tcols, keys)
+        neg = bool(sub.group("neg"))
+        return self._delete_members(
+            name, self._in_cols(sub), keys, neg, null_aware=True
+        )
 
-    def _delete_in_keys(self, name: str, tcols, keys) -> DataFrame:
-        if len(keys.columns) != len(tcols):
-            raise ValueError(
-                "IN-subquery must return exactly "
-                f"{'one column' if len(tcols) == 1 else f'{len(tcols)} columns'}"
-                f", got {keys.columns}"
-            )
-        nn = None
-        for c in tcols:
-            p = F.col(c).isNotNull()
-            nn = p if nn is None else (nn & p)
-        # positional rename (toDF handles duplicate-named subquery cols)
-        keys = keys.toDF(*tcols).where(nn).distinct()
-        table = self.table(name)
-        # merge() wants the full target schema (updateAll contract); a
-        # delete-only source never stores its payload, so pad the other
-        # columns with typed NULLs (identity columns must stay absent)
-        schema = _schema_from_json(self.spark, table.detail()["schema"])
-        ident = table.properties().get("identity", {})
-        keys = keys.select(
-            *tcols,
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in schema.fields
-                if f.name not in tcols and f.name not in ident
-            ],
-        )
-        # rows_deleted is observed DURING the merge's CDC write action
-        # (round 12) — no pre-commit count job; a zero-match statement
-        # commits nothing, so the metric defaults to 0
-        before = table.latest_version()
-        version = table.merge(
-            keys, on=tcols, when_matched_delete=F.lit(True)
-        )
-        c = table.history(limit=1)[0]
-        n = (
-            (c.metrics or {}).get("rows_deleted", 0)
-            if version > before and c.operation == "MERGE"
-            else 0
-        )
-        return self.spark.createDataFrame(
-            [(name, version, n)],
-            "table string, version int, num_affected_rows long",
+    def _delete_members(
+        self, name: str, tcols, keys, neg: bool, null_aware: bool
+    ) -> DataFrame:
+        """``DELETE ... WHERE [NOT] IN / [NOT] EXISTS`` through the
+        table layer's key-membership row marker and its one DELETE core
+        (per-file drop / copy-on-write / deletion vector; NULL
+        semantics live there)."""
+        return self._dml_result(
+            name,
+            "DELETE",
+            lambda t: t.delete_where_not_in(tcols, keys, null_aware)
+            if neg
+            else t.delete_where_in(tcols, keys),
         )
 
     _EXISTS_SUBQUERY = _ci(
@@ -4203,88 +4176,39 @@ class Lakehouse:
         keys = self._run_query(rewritten)
         return outer_cols, keys, bool(m.group("neg"))
 
-    def _delete_not_matching(
-        self, name: str, tcols, keys, null_aware: bool
-    ) -> DataFrame:
-        """``DELETE ... WHERE col NOT IN (SELECT ...)`` /
-        ``WHERE NOT EXISTS (...)`` through the engine's anti-membership
-        DML core (NULL semantics there)."""
-        table = self.table(name)
-        before = table.latest_version()
-        version = table.delete_where_not_in(
-            tcols if len(tcols) > 1 else tcols[0], keys, null_aware
-        )
-        c = table.history(limit=1)[0]
-        n = (
-            (c.metrics or {}).get("rows_deleted", 0)
-            if version > before and c.operation == "DELETE"
-            else 0  # zero-match delete commits nothing
-        )
-        return self.spark.createDataFrame(
-            [(name, version, n)],
-            "table string, version int, num_affected_rows long",
-        )
-
-    def _update_not_matching(
-        self, name: str, assignments: dict, tcols, keys, null_aware: bool
-    ) -> DataFrame:
-        table = self.table(name)
-        before = table.latest_version()
-        version = table.update_where_not_in(
-            tcols if len(tcols) > 1 else tcols[0],
-            keys,
-            assignments,
-            null_aware,
-        )
-        c = table.history(limit=1)[0]
-        n = (
-            (c.metrics or {}).get("rows_updated", 0)
-            if version > before and c.operation == "UPDATE"
-            else 0
-        )
-        return self.spark.createDataFrame(
-            [(name, version, n)],
-            "table string, version int, num_affected_rows long",
-        )
-
     def _update_in_subquery(self, name: str, assignments: dict, sub):
         """``UPDATE t SET ... WHERE col [NOT] IN (SELECT ...)`` — the
-        UPDATE twin of :meth:`_delete_in_subquery` (the round-8
-        verdict's asymmetry): IN routes to the table layer's
-        :meth:`~.tables.ParquetTable.update_where_in` update-only MERGE,
-        which replaces each matched target row with its own row-wise
-        post-image — duplicates preserved, NULL keys never matched, the
-        rewrite touched-file pruned; NOT IN routes to
-        :meth:`~.tables.ParquetTable.update_where_not_in` (NULL-aware
-        anti-join, SQL three-valued contract)."""
-        tcols = self._in_cols(sub)
+        UPDATE twin of :meth:`_delete_in_subquery`: both forms go to
+        the table layer's key-membership UPDATE
+        (:meth:`_update_members`), so every matched row takes row-wise
+        UPDATE semantics (duplicates kept, NULL keys never matched by
+        IN, NOT IN NULL-aware per the SQL three-valued contract)."""
         keys = self._run_query(sub.group("sub"))
-        if sub.group("neg"):
-            return self._update_not_matching(
-                name, assignments, tcols, keys, null_aware=True
-            )
-        return self._update_in_exists_keys(name, assignments, tcols, keys)
-
-    def _update_in_exists_keys(
-        self, name: str, assignments: dict, tcols, keys
-    ) -> DataFrame:
-        """Shared positive-membership UPDATE tail (IN and decorrelated
-        EXISTS): update-only MERGE on the key columns."""
-        table = self.table(name)
-        before = table.latest_version()
-        version = table.update_where_in(tcols, keys, assignments)
-        # rows_updated is observed DURING the merge's CDC write action
-        # (round 12) — no post-commit count job; a zero-match statement
-        # commits nothing, so the metric defaults to 0
-        c = table.history(limit=1)[0]
-        n = (
-            (c.metrics or {}).get("rows_updated", 0)
-            if version > before and c.operation == "MERGE"
-            else 0
+        neg = bool(sub.group("neg"))
+        return self._update_members(
+            name, assignments, self._in_cols(sub), keys, neg, null_aware=True
         )
-        return self.spark.createDataFrame(
-            [(name, version, n)],
-            "table string, version int, num_affected_rows long",
+
+    def _update_members(
+        self,
+        name: str,
+        assignments: dict,
+        tcols,
+        keys,
+        neg: bool,
+        null_aware: bool,
+    ) -> DataFrame:
+        """``UPDATE ... WHERE [NOT] IN / [NOT] EXISTS`` through the
+        table layer's key-membership row marker and its one UPDATE
+        core (per-file copy-on-write / deletion vector)."""
+        return self._dml_result(
+            name,
+            "UPDATE",
+            lambda t: t.update_where_not_in(
+                tcols, keys, assignments, null_aware
+            )
+            if neg
+            else t.update_where_in(tcols, keys, assignments),
         )
 
     _UPDATE = _ci(r"^UPDATE\s+(`?[\w.]+`?)\s+SET\s+(?P<tail>.+)$")
@@ -4328,12 +4252,9 @@ class Lakehouse:
             return self._update_in_subquery(name, assignments, sub)
         ex = self._parse_exists(name, cond)
         if ex is not None:
-            tcols, keys, neg = ex
-            if neg:
-                return self._update_not_matching(
-                    name, assignments, tcols, keys, null_aware=False
-                )
-            return self._update_in_exists_keys(name, assignments, tcols, keys)
+            return self._update_members(
+                name, assignments, *ex, null_aware=False
+            )
         set_n = len(corr)
         if _ci(r"\(\s*SELECT\b").search(_mask_strings(cond)):
             # the shared corr list keeps lookup column names unique
@@ -4350,24 +4271,16 @@ class Lakehouse:
                     "THEN UPDATE SET ..."
                 )
         where_corr, set_corr = corr[set_n:], corr[:set_n]
-        table = self.table(name)
-        before = table.latest_version()
-        version = table.update(
-            CorrelatedCondition(tuple(where_corr), cond)
-            if where_corr
-            else cond,
-            assignments,
-            corr_lookups=set_corr or None,
-        )
-        c = table.history(limit=1)[0]
-        n = (
-            (c.metrics or {}).get("rows_updated", 0)
-            if version > before and c.operation == "UPDATE"
-            else 0  # zero-match update commits nothing
-        )
-        return self.spark.createDataFrame(
-            [(name, version, n)],
-            "table string, version int, num_affected_rows long",
+        return self._dml_result(
+            name,
+            "UPDATE",
+            lambda t: t.update(
+                CorrelatedCondition(tuple(where_corr), cond)
+                if where_corr
+                else cond,
+                assignments,
+                corr_lookups=set_corr or None,
+            ),
         )
 
     _INSERT = _ci(
@@ -4715,23 +4628,8 @@ class Lakehouse:
         m = self._TRUNCATE.match(stmt)
         if not m:
             raise ValueError(f"unsupported TRUNCATE form: {stmt[:80]!r}")
-        name = _unquote_ident(m.group(1))
-        table = self.table(name)
-        if table.count() == 0:  # metadata-only probe: nothing to drop
-            return self.spark.createDataFrame(
-                [(name, table.latest_version(), 0)],
-                "table string, version int, num_affected_rows long",
-            )
-        version = table.delete("true")
-        c = table.history(limit=1)[0]
-        n = (
-            (c.metrics or {}).get("rows_deleted", 0)
-            if c.version == version and c.operation == "DELETE"
-            else 0
-        )
-        return self.spark.createDataFrame(
-            [(name, version, n)],
-            "table string, version int, num_affected_rows long",
+        return self._dml_result(
+            _unquote_ident(m.group(1)), "DELETE", lambda t: t.delete("true")
         )
 
     # -- ALTER TABLE --------------------------------------------------------

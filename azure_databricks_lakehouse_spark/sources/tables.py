@@ -243,15 +243,20 @@ class CorrelatedCondition:
 
 
 @dataclass(frozen=True)
-class KeyAntiCondition:
-    """A DML condition that matches rows whose key does NOT appear in
-    ``keys`` — the join-shaped predicate behind ``DELETE/UPDATE ...
-    WHERE col NOT IN (SELECT ...)`` and ``WHERE NOT EXISTS (...)``.
+class KeyCondition:
+    """A DML condition that matches rows by key membership in ``keys``
+    — the join-shaped predicate behind ``DELETE/UPDATE ... WHERE col
+    [NOT] IN (SELECT ...)`` and ``WHERE [NOT] EXISTS (...)``, which a
+    row-wise Column can't express.
 
     ``keys`` must already be distinct with NULL key rows dropped (the
     caller owns the subquery's NULL semantics: a NULL-bearing NOT IN
     subquery matches nothing and must short-circuit BEFORE building
-    this spec).  ``null_aware`` selects the target-side semantics:
+    this spec).  ``anti=False`` (``IN`` / ``EXISTS``) marks rows whose
+    key IS in ``keys``: a NULL target key never joins, so it never
+    matches, as SQL ``IN`` requires.  ``anti=True`` marks rows whose
+    key is NOT in ``keys``, and ``null_aware`` selects its target-side
+    semantics:
 
     - True (``NOT IN``): a target row with a NULL key component never
       matches — SQL three-valued logic leaves it UNKNOWN;
@@ -262,6 +267,7 @@ class KeyAntiCondition:
 
     cols: tuple[str, ...]
     keys: DataFrame
+    anti: bool
     null_aware: bool
 
     def _decorator(self):
@@ -270,15 +276,15 @@ class KeyAntiCondition:
 
         def dec(df: DataFrame) -> DataFrame:
             out = df.join(keyset, cols, "left")
-            miss = F.col("__m").isNull()
-            if self.null_aware:
-                nn = functools.reduce(
-                    lambda a, b: a & b,
-                    [F.col(c).isNotNull() for c in cols],
-                )
-                hit = nn & miss
-            else:
-                hit = miss
+            hit = F.col("__m").isNotNull()
+            if self.anti:
+                hit = ~hit
+                if self.null_aware:
+                    hit = functools.reduce(
+                        lambda a, b: a & b,
+                        [F.col(c).isNotNull() for c in cols],
+                        hit,
+                    )
             # re-select in the caller's order: the USING-join moved the
             # key columns first, and rewrite files should keep the
             # manifest's column order
@@ -729,13 +735,13 @@ class ParquetTable:
         """(decorate, prune-tree) for any DML condition form: decorate
         stamps a boolean ``__hit`` column (never NULL) onto any frame
         of table rows.  A Column/str condition marks row-wise; a
-        :class:`KeyAntiCondition` marks by a key-frame ANTI-membership
-        join — the engine shape behind ``NOT IN (SELECT ...)`` /
-        ``NOT EXISTS`` DML, which a row-wise Column can't express.
-        No prune tree for key specs: anti-membership can't rule out a
-        file from metadata (a file with NO key in the probe is all
-        hits, not no hits)."""
-        if isinstance(condition, (KeyAntiCondition, CorrelatedCondition)):
+        :class:`KeyCondition` marks by a key-frame membership join —
+        the engine shape behind ``[NOT] IN (SELECT ...)`` /
+        ``[NOT] EXISTS`` DML, which a row-wise Column can't express.
+        No prune tree for key specs: a key frame has no footer stats to
+        rule a file out with, and under anti-membership a file with NO
+        key in the probe is all hits, not no hits."""
+        if isinstance(condition, (KeyCondition, CorrelatedCondition)):
             return condition._decorator(), None
         cond_col, pred = self._as_condition(condition)
         base = F.coalesce(cond_col, F.lit(False))
@@ -797,7 +803,8 @@ class ParquetTable:
             return {}
         aligned = self._read_files_aligned(candidates, m, keep_pos=True)
         # cond is a Column, or a decorate() callable stamping __hit
-        # (key-anti DML — the membership needs a join, not a row expr)
+        # (key-membership DML — the membership needs a join, not a row
+        # expr)
         marked = (
             cond(aligned)
             if callable(cond) and not isinstance(cond, Column)
@@ -1540,135 +1547,57 @@ class ParquetTable:
     def update_where_in(
         self, col: str | Sequence[str], keys: DataFrame, assignments: dict
     ) -> int:
-        """Row-wise ``UPDATE ... SET ... WHERE col IN (<keys>)`` with
-        the match set given as a DataFrame — the engine behind the SQL
-        front-end's IN-subquery UPDATE (Databricks supports subquery
-        predicates in DML; a row-wise Column can't express a semi-join).
-        ``col`` may be a single column or a sequence for the tuple form
-        ``(a, b) IN (SELECT x, y ...)`` — a key row with ANY NULL
-        component never matches (SQL tuple-IN is UNKNOWN there).
+        """Row-wise ``UPDATE ... SET ... WHERE col IN (<keys>)`` (or the
+        decorrelated ``WHERE EXISTS (...)``) with the match set given as
+        a DataFrame — the engine behind the SQL front-end's
+        IN-subquery UPDATE (Databricks supports subquery predicates in
+        DML; a row-wise Column can't express a semi-join).  ``col`` may
+        be a single column or a sequence for the tuple form ``(a, b) IN
+        (SELECT x, y ...)`` — a key row with ANY NULL component never
+        matches (SQL tuple-IN is UNKNOWN there).
 
-        Routes through an update-only MERGE whose source is the matched
-        target rows' POST-images: every SET expression is evaluated
-        against the PRE-update row in one projection (SQL swap
-        semantics — ``SET a = b, b = a`` swaps), unmatched keys are
-        no-ops, and the rewrite stays touched-file pruned by merge's own
-        findTouchedFiles probe.  The duplicate-source validator is OFF
-        by design: a duplicate-key target group {r1, r2} is replaced by
-        {post(r1), post(r2)} — the anti-join + union is exactly multiset
-        row-wise UPDATE, preserving duplicates instead of MERGE's usual
-        group-collapse.  NULL keys never match (SQL ``IN``), identity
-        columns pass through verbatim (their values are the target's
-        own), and generated columns not explicitly assigned are dropped
-        from the post-image so merge recomputes them over the post-update
-        row (:meth:`update`'s semantics).
+        Runs through :meth:`update` with a :class:`KeyCondition` row
+        marker, so it shares everything row-wise UPDATE does: the
+        per-file copy-on-write / deletion-vector split, SQL swap
+        semantics (``SET a = b, b = a`` swaps), duplicate-key target
+        rows each updated from their own pre-image, stable row ids and
+        identity values kept, unassigned generated columns recomputed,
+        the ``update_preimage`` / ``update_postimage`` CDC rows, and a
+        zero-match statement committing nothing (Delta's
+        ``delta.skipRecordingEmptyCommits``).  Commits as UPDATE.
 
-        ``col`` itself cannot be assigned: the rewrite merges ON it, and
-        a changed key would dodge the anti-join that removes the row's
-        pre-image.  Commits as MERGE (CDF consumers see
-        ``update_preimage``/``update_postimage`` rows).
-
-        Zero-match DML commits nothing — the ENGINE-WIDE contract
-        (Delta's ``delta.skipRecordingEmptyCommits``, default since
-        2.3): :meth:`delete`, :meth:`update`, this method, and the
-        zero-touched MERGE path all skip the commit and return the
-        current version, so every DML twin (row-wise vs IN-subquery)
-        produces an IDENTICAL history and relative
-        ``RESTORE ... VERSION AS OF v-1`` composes the same way."""
+        ``col`` itself cannot be assigned here (:meth:`update_where_not_in`
+        allows it); use MERGE for a key-changing membership update."""
         cols = [col] if isinstance(col, str) else list(col)
-        m = self._manifest()
-        self._gate_append_only("UPDATE", m)
-        schema = _schema_from_json(self.spark, m["schema"])
-        types = {f.name: f.dataType for f in schema.fields}
-        for c in cols:
-            if c not in types:
-                raise ValueError(f"UPDATE references unknown column {c!r}")
-        unknown = set(assignments) - set(types)
-        if unknown:
-            raise ValueError(
-                f"UPDATE references unknown columns {sorted(unknown)}"
-            )
-        ident = m.get("props", {}).get("identity", {})
-        ident_assigned = set(assignments) & set(ident)
-        if ident_assigned:
-            raise ValueError(
-                f"UPDATE assigns identity columns {sorted(ident_assigned)}; "
-                "they are GENERATED ALWAYS"
-            )
         assigned_keys = set(cols) & set(assignments)
         if assigned_keys:
             raise ValueError(
                 f"UPDATE ... WHERE {tuple(cols)} IN (SELECT ...) cannot "
-                f"SET the membership columns {sorted(assigned_keys)} "
-                "(the rewrite merges on them); use MERGE INTO ... WHEN "
-                "MATCHED THEN UPDATE directly"
+                f"SET the membership columns {sorted(assigned_keys)}; "
+                "use MERGE INTO ... WHEN MATCHED THEN UPDATE directly"
             )
-        if len(keys.columns) != len(cols):
-            raise ValueError(
-                "IN-subquery must return exactly "
-                f"{'one column' if len(cols) == 1 else f'{len(cols)} columns'}"
-                f", got {keys.columns}"
-            )
-        # no cast onto the key frame: Spark's join coercion compares in
-        # the common type, exactly what IN does — casting to the target
-        # column's type could overflow-wrap a wider key into a spurious
-        # match
-        keyset = (
-            # positional rename (toDF handles duplicate-named source cols)
-            keys.toDF(*cols)
-            .where(
-                functools.reduce(
-                    lambda a, b: a & b,
-                    [F.col(c).isNotNull() for c in cols],
-                )
-            )
-            .distinct()
-        )
-        # no zero-match pre-probe: merge's own empty-commit
-        # short-circuit covers it (zero touched files + empty upsert
-        # payload ⇒ no commit), so paying a dedicated full-table semi
-        # scan here would double the probe cost of every statement
-        pre = self.read().join(keyset, cols, "semi")
-        gen_auto = {
-            c
-            for c in m.get("props", {}).get("generated", {})
-            if c not in assignments and c in types
-        }
-        post = pre.select(
-            *[
-                (
-                    # declared-type cast: same implicit-cast rule as
-                    # update() — a double RHS into a decimal column must
-                    # not commit a contradicting physical type
-                    assignments[c].cast(types[c])
-                    if c in assignments
-                    else F.col(c)
-                ).alias(c)
-                for c in types
-                if c not in gen_auto
-            ]
-        ).localCheckpoint()  # one table semi-scan, not one per merge
-        # action (probe/write/CDC each consume the source); size ∝
-        # matched rows — the merge source any engine materializes
-        return self.merge(
-            post,
-            on=cols,
-            validate_source_keys=False,
-            identity_passthrough=True,
-        )
+        return self.update(self._key_condition(cols, keys), assignments)
 
-    def _anti_spec(self, col, keys: DataFrame, null_aware: bool):
-        """Shared prep for the NOT-IN / NOT-EXISTS DML twins: validate
-        the membership columns, resolve the subquery's NULL semantics
-        with ONE key-frame aggregate (never a table scan), and return
+    def _key_condition(
+        self, col, keys: DataFrame, anti: bool = False, null_aware: bool = True
+    ):
+        """Shared prep for the membership DML twins: validate the
+        membership columns and the subquery's arity, and return the
+        row marker for :meth:`delete` / :meth:`update`.
 
-        - ``"NONE"`` — no row can match (``NOT IN`` with a NULL key:
+        The positive forms (``IN`` / ``EXISTS``) always get a
+        :class:`KeyCondition` over the distinct non-NULL keys and pay
+        no Spark action here: an empty or NULL-only key set simply
+        marks nothing.  The anti forms resolve the subquery's NULL
+        semantics with ONE key-frame aggregate (never a table scan)
+        and return
+
+        - ``None`` — no row can match (``NOT IN`` with a NULL key:
           every comparison is at best UNKNOWN);
-        - ``"ALL"`` — every row matches (empty subquery: ``x NOT IN
-          ()`` is TRUE even for NULL x; ``NOT EXISTS`` against no
+        - ``F.lit(True)`` — every row matches (empty subquery: ``x NOT
+          IN ()`` is TRUE even for NULL x; ``NOT EXISTS`` against no
           usable key likewise);
-        - a :class:`KeyAntiCondition` over the distinct non-NULL keys
-          otherwise.
+        - a :class:`KeyCondition` otherwise.
 
         Tuple (multi-column) ``NOT IN`` raises: its three-valued logic
         is per-component (a subquery row ``(x, NULL)`` poisons only
@@ -1677,7 +1606,7 @@ class ParquetTable:
         (equality correlation) stays a plain anti-join and is
         supported."""
         cols = [col] if isinstance(col, str) else list(col)
-        if null_aware and len(cols) > 1:
+        if anti and null_aware and len(cols) > 1:
             raise ValueError(
                 "tuple NOT IN is not supported: its three-valued NULL "
                 "semantics are per-component, not an anti-join; use "
@@ -1685,37 +1614,58 @@ class ParquetTable:
                 "with explicit correlation"
             )
         m = self._manifest()
-        types = {
-            f.name: f.dataType
-            for f in _schema_from_json(self.spark, m["schema"]).fields
-        }
+        names = _schema_from_json(self.spark, m["schema"]).fieldNames()
         for c in cols:
-            if c not in types:
+            if c not in names:
                 raise ValueError(f"DML references unknown column {c!r}")
+        if len(keys.columns) != len(cols):
+            raise ValueError(
+                "IN-subquery must return exactly "
+                f"{'one column' if len(cols) == 1 else f'{len(cols)} columns'}"
+                f", got {keys.columns}"
+            )
+        # positional rename (toDF handles duplicate-named subquery
+        # cols); no cast onto the key frame: Spark's join coercion
+        # compares in the common type, exactly what IN does — casting to
+        # the target column's type could overflow-wrap a wider key into
+        # a spurious match
         keyset = keys.toDF(*cols)
         nn = functools.reduce(
             lambda a, b: a & b, [F.col(c).isNotNull() for c in cols]
         )
-        # ONE aggregate answers every routing question (count, per-col
-        # NULL presence, clean-row count) — the NOT EXISTS route used
-        # to pay a second isEmpty action for the NULL-only case
-        row = keyset.agg(
-            F.count(F.lit(1)).alias("__n"),
-            *[
-                F.max(F.col(c).isNull().cast("int")).alias(f"__nl_{i}")
-                for i, c in enumerate(cols)
-            ],
-            F.count(F.when(nn, 1)).alias("__clean"),
-        ).first()
-        if row["__n"] == 0:
-            return "ALL"
-        if null_aware and any(row[f"__nl_{i}"] for i in range(len(cols))):
-            return "NONE"
-        if not null_aware and row["__clean"] == 0:
-            # NOT EXISTS: NULL-only subquery keys can equal nothing
-            return "ALL"
-        clean = keyset.where(nn).distinct()
-        return KeyAntiCondition(tuple(cols), clean, null_aware)
+        if anti:
+            # ONE aggregate answers every routing question (count,
+            # per-col NULL presence, clean-row count)
+            row = keyset.agg(
+                F.count(F.lit(1)).alias("__n"),
+                *[
+                    F.max(F.col(c).isNull().cast("int")).alias(f"__nl_{i}")
+                    for i, c in enumerate(cols)
+                ],
+                F.count(F.when(nn, 1)).alias("__clean"),
+            ).first()
+            if row["__n"] == 0:
+                return F.lit(True)
+            if null_aware and any(row[f"__nl_{i}"] for i in range(len(cols))):
+                return None
+            if not null_aware and row["__clean"] == 0:
+                # NOT EXISTS: NULL-only subquery keys can equal nothing
+                return F.lit(True)
+        return KeyCondition(
+            tuple(cols), keyset.where(nn).distinct(), anti, null_aware
+        )
+
+    def delete_where_in(
+        self, col: str | Sequence[str], keys: DataFrame
+    ) -> int:
+        """``DELETE FROM t WHERE col IN (<keys>)`` (or the decorrelated
+        ``WHERE EXISTS (...)``) with the subquery result given as a
+        DataFrame; ``col`` may be a sequence for tuple-IN.  NULL keys
+        on either side never match.  Runs through :meth:`delete` with a
+        :class:`KeyCondition` row marker, so each touched file takes
+        DELETE's cheapest strategy (drop / copy-on-write / deletion
+        vector) and the commit is a DELETE."""
+        return self.delete(self._key_condition(col, keys))
 
     def delete_where_not_in(
         self,
@@ -1744,12 +1694,10 @@ class ParquetTable:
         the keyset broadcasts when small (AQE), the table never
         shuffles.  No metadata pruning: absence of a key is not
         provable from footer stats."""
-        spec = self._anti_spec(col, keys, null_aware)
-        if spec == "NONE":
+        cond = self._key_condition(col, keys, anti=True, null_aware=null_aware)
+        if cond is None:
             return self.latest_version()
-        if spec == "ALL":
-            return self.delete(F.lit(True), mode=mode, dv_threshold=dv_threshold)
-        return self.delete(spec, mode=mode, dv_threshold=dv_threshold)
+        return self.delete(cond, mode=mode, dv_threshold=dv_threshold)
 
     def update_where_not_in(
         self,
@@ -1763,19 +1711,15 @@ class ParquetTable:
         """``UPDATE t SET ... WHERE col NOT IN (<keys>)`` /
         ``WHERE NOT EXISTS (...)`` — the UPDATE twin of
         :meth:`delete_where_not_in` (same NULL semantics table).
-        Unlike :meth:`update_where_in`, the membership columns MAY be
-        assigned: the anti-join marks rows on their PRE-update image
-        inside :meth:`update`'s rewrite, so a changed key cannot dodge
-        its own match."""
-        spec = self._anti_spec(col, keys, null_aware)
-        if spec == "NONE":
+        Unlike :meth:`update_where_in`, which refuses it, the membership
+        columns MAY be assigned: the anti-join marks rows on their
+        PRE-update image inside :meth:`update`'s rewrite, so a changed
+        key cannot dodge its own match."""
+        cond = self._key_condition(col, keys, anti=True, null_aware=null_aware)
+        if cond is None:
             return self.latest_version()
-        if spec == "ALL":
-            return self.update(
-                F.lit(True), assignments, mode=mode, dv_threshold=dv_threshold
-            )
         return self.update(
-            spec, assignments, mode=mode, dv_threshold=dv_threshold
+            cond, assignments, mode=mode, dv_threshold=dv_threshold
         )
 
     def overwrite_where(
@@ -2474,6 +2418,21 @@ class ParquetTable:
         if s and s.get("num_rows") is not None:
             return int(s["num_rows"])
         return self._exact_rows(m)
+
+    def footer_range(self, col: str) -> tuple | None:
+        """``(min, max)`` of ``col`` over the live files' write-time
+        footer stats — manifest and stats sidecars only, no Spark job.
+        None when the table has no files or a file has no stats for
+        ``col`` (the stats skip non-scalar types such as DATE).  Under
+        deletion vectors the pair bounds the live values rather than
+        equalling their extremes."""
+        m = self._manifest()
+        phys = _physical_name(m, col)
+        stats = self._stats(m)
+        rngs = [stats.get(f, {}).get(phys) for f in m["files"]]
+        if not rngs or None in rngs:
+            return None
+        return min(r[0] for r in rngs), max(r[1] for r in rngs)
 
     def partition_file_frame(self, version: int | None = None) -> DataFrame | None:
         """One metadata row per live data file: the file's typed LOGICAL
@@ -4125,7 +4084,6 @@ class ParquetTable:
         when_matched_delete=None,
         source_meta_cols: Sequence[str] = (),
         validate_source_keys: bool = True,
-        identity_passthrough: bool = False,
         evolve_schema: bool = False,
         extra_props: dict | None = None,
     ) -> int:
@@ -4197,21 +4155,10 @@ class ParquetTable:
         consumers see the new column).  Without the flag a wider source
         raises, mirroring the append path's ``merge_schema=True``
         contract.
-
-        ``identity_passthrough`` (internal, for engine rewrites whose
-        source rows ARE the target's own rows — :meth:`update_where_in`):
-        the source carries the identity columns verbatim instead of
-        omitting them, no inheritance or fresh allocation runs, and the
-        high water is untouched.  Never expose to user sources: it
-        bypasses the GENERATED ALWAYS refusal.
         """
         m = self._manifest()
         self._gate_append_only("MERGE", m)
         ident = m.get("props", {}).get("identity", {})
-        if identity_passthrough:
-            # source rows are target rows: identity values are already
-            # correct by construction, no attach/allocation needed
-            ident = {}
         if ident:
             # Delta's contract: the source OMITS identity columns
             # (GENERATED ALWAYS forbids explicit values).  Matched rows
@@ -4414,9 +4361,8 @@ class ParquetTable:
             # skipRecordingEmptyCommits parity: no target file contains
             # a matched key and the upsert payload is empty (a
             # pure-delete source that matched nothing) — nothing can
-            # change, so commit nothing.  Keeps the MERGE-backed
-            # IN-subquery DML twins history-identical with the row-wise
-            # delete()/update() zero-match paths.  The isEmpty probe
+            # change, so commit nothing, exactly as the zero-match
+            # delete()/update() paths do.  The isEmpty probe
             # only runs on the already-rare zero-touched-file path.
             return m["version"]
 
@@ -4496,7 +4442,8 @@ class ParquetTable:
         def _stored(x, i):
             # a stored source row inherits the ids of the target row at
             # its position in the key group (a key-unique target has one;
-            # update_where_in's duplicate-key groups pair row for row);
+            # an unvalidated source's duplicate-key groups pair row for
+            # row);
             # rows past the group's end and inserts get NULL ids
             tx = F.try_element_at(F.col("__t"), i + 1)
             return F.struct(

@@ -190,8 +190,8 @@ def test_merge_on_identity_table(spark, tmp_path):
 
 
 def test_update_where_in_passes_identity_through(spark, tmp_path):
-    """The IN-subquery UPDATE rewrite carries identity values verbatim
-    (its merge source IS the target's own rows): updated rows keep
+    """The IN-subquery UPDATE carries identity values verbatim (it
+    rewrites the target's own rows through update()): updated rows keep
     their ids, the high water doesn't move, and assigning an identity
     column still refuses."""
     tbl = ParquetTable.create(

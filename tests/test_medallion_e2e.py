@@ -213,16 +213,18 @@ def _data_files(root):
 
 def test_batch_gold_leaves_unchanged_dims_uncommitted(spark, lake, tmp_path):
     """Batch twin of the streaming quiet-trigger test: a second
-    ``gold.build`` over unchanged silver members/providers commits
-    nothing to dim_member/dim_provider — same latest version, same data
-    files byte for byte — while new silver claims still reach the fact."""
+    ``gold.build`` over unchanged silver members/providers and the same
+    date range commits nothing to dim_member/dim_provider/dim_date —
+    same latest version, same data files byte for byte — while new
+    silver claims still reach the fact.  Only a date range the stored
+    dim does not cover rewrites dim_date."""
     bronze.ingest(
         spark, lake.bronze_claims, _land(tmp_path, "d1.csv", _DAY1), load_id="b1"
     )
     silver.process(spark, lake)
     _load_reference_tables(spark, lake)
     gold.build(spark, lake, "2024-01-01", "2024-12-31")
-    dims = (lake.dim_member, lake.dim_provider)
+    dims = (lake.dim_member, lake.dim_provider, lake.dim_date)
     versions = {r: ParquetTable.for_path(spark, r).latest_version() for r in dims}
     files = {r: _data_files(r) for r in dims}
 
@@ -236,6 +238,12 @@ def test_batch_gold_leaves_unchanged_dims_uncommitted(spark, lake, tmp_path):
         assert ParquetTable.for_path(spark, r).latest_version() == versions[r]
         assert _data_files(r) == files[r], f"dim files rewritten: {r}"
     assert not os.path.exists(lake.watermarks)
+    date_t = ParquetTable.for_path(spark, lake.dim_date)
+    gold.build_dim_date(spark, lake, "2024-03-01", "2024-06-30")  # covered
+    assert date_t.latest_version() == versions[lake.dim_date]
+    gold.build_dim_date(spark, lake, "2023-12-01", "2024-12-31")  # wider
+    assert date_t.latest_version() == versions[lake.dim_date] + 1
+    assert date_t.count() == 31 + 366
 
 
 def test_restore_rewinds_silver_mark(spark, lake, tmp_path):

@@ -985,7 +985,7 @@ def test_update_where_in_rowwise_on_duplicate_key_target(spark, tmp_path, lh):
 def test_tuple_in_subquery_dml(spark, tmp_path, lh):
     """Composite-key membership (Databricks tuple-IN): both DELETE and
     UPDATE accept ``(a, b) IN (SELECT x, y ...)`` — a key row with ANY
-    NULL component never matches, and the rewrite merges on all
+    NULL component never matches, and the key join uses all
     components."""
     t = _mk(
         spark,

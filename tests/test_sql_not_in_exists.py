@@ -125,8 +125,8 @@ def test_exists_with_residual_conjunct_and_reversed_sides(lh):
 
 
 def test_update_not_in_may_assign_membership_column(lh):
-    """Unlike update_where_in (which merges ON the column), the
-    anti-join marks rows pre-update, so assigning the key is legal."""
+    """Unlike update_where_in (which refuses it), the anti-join marks
+    rows pre-update, so assigning the key is legal."""
     _mk(lh)
     lh.sql("CREATE TABLE s AS SELECT col1 AS x FROM VALUES (1)")
     r = lh.sql(

@@ -919,7 +919,7 @@ def test_history_limit_parses_only_newest(spark, tmp_path):
 
 def test_update_where_in_through_column_mapping(spark, root):
     """update_where_in on a RENAMED logical column routes through the
-    colmap to the physical name (merge's _to_physical_df path)."""
+    colmap to the physical name (update's _to_physical_df path)."""
     t = ParquetTable.create(
         spark,
         root,
@@ -935,7 +935,7 @@ def test_update_where_in_through_column_mapping(spark, root):
 
 
 def test_update_where_in_rewrites_only_touched_files(spark, root):
-    """The IN-subquery UPDATE inherits merge's findTouchedFiles probe:
+    """The IN-subquery UPDATE inherits update()'s per-file match probe:
     keys confined to one partition rewrite only that partition's files
     — untouched files carry over by reference (the 100 TB contract)."""
     df = _rows(spark, [(1, "p1", "a"), (2, "p2", "b"), (3, "p3", "c")])
